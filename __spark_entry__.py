@@ -5092,16 +5092,16 @@ FROM s QUALIFY rank <= 25
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering contract (round 6): the driver's CORRECTNESS gate verifies the
-    # FIRST 50 entries.  Positions 1-8 are the last 8 queries never verified
-    # by a driver-side oracle row (VERDICT r05 "Next round: do this" #1) —
-    # green rows here complete 115/115 union driver coverage; positions 9-10
-    # keep the jaccard + edit canaries the judge asked to stay in-window.
-    # The rest of the window is the round-5 window shifted down; everything
-    # it displaces was driver-verified green in CORRECTNESS_r05 and remains
-    # re-proven every round by pytest + the local full-parity gate.
+    # Ordering (round 6): positions 1-8 hold the 8 queries that have never
+    # had a driver-side oracle row, expecting the CORRECTNESS gate to check
+    # the FIRST 50 entries.  It did not: CORRECTNESS_r05.json and
+    # CORRECTNESS_r06.json hold the same 50 names, and neither contains
+    # these 8 or connected_components_part.  Those 9 queries still have no
+    # driver oracle row; only pytest and the local full-parity run
+    # (scripts/check_oracle_parity.py) check them.  Positions 9-10 keep the
+    # jaccard + edit canaries in the first 50.
     return {
-        # -- 1-8: never driver-verified before round 6 (VERDICT r05 #1) ----
+        # -- 1-8: no driver oracle row yet (see above) ---------------------
         "corpus_report_docs": q_corpus_report_docs,
         "corpus_breakdown_docs": q_corpus_breakdown_docs,
         "doc_keywords_docs": q_doc_keywords_docs,

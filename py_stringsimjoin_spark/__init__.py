@@ -18,23 +18,6 @@ from .functions.tokenizers import (
     ShingleTokenizer,
     WhitespaceTokenizer,
 )
-from .functions.avi import (
-    avi_duration_ms,
-    decode_avi_frame,
-    is_avi,
-    parse_avi,
-)
-from .functions.codecs import (
-    decode_bmp,
-    decode_gif,
-    decode_gif_frames,
-    decode_png,
-    decode_wav_pcm,
-    gif_duration_ms,
-    gif_frame_at,
-    real_media_features,
-)
-from .functions.jpeg import decode_jpeg
 from .functions.media import (
     media_dims_col,
     media_duration_col,
@@ -49,11 +32,7 @@ from .functions.urls import (
     url_host_expr,
     url_registrable_domain_expr,
 )
-from .operators.multimodal import (
-    attach_media_meta,
-    extract_media_features,
-    frame_sample_plan,
-)
+from .operators.multimodal import attach_media_meta
 from .operators.dedup import canonical_url_groups, plan_lsh_params
 from .operators.band_join import band_join
 from .operators.blocking import blocking_rule_stats, combine_blockers
@@ -280,24 +259,9 @@ __all__ = [
     "unigram_cross_entropy",
     "top_tokens",
     "attach_media_meta",
-    "extract_media_features",
-    "frame_sample_plan",
     "media_format_col",
     "media_dims_col",
     "media_duration_col",
     "py_container_duration_ms",
-    "decode_png",
-    "decode_gif",
-    "decode_bmp",
-    "decode_gif_frames",
-    "gif_duration_ms",
-    "gif_frame_at",
-    "decode_jpeg",
-    "parse_avi",
-    "decode_avi_frame",
-    "avi_duration_ms",
-    "is_avi",
-    "decode_wav_pcm",
-    "real_media_features",
     "synth_media_bytes",
 ]

@@ -146,10 +146,9 @@ def _is_avi(b: Column) -> Column:
 
 def _avi_duration_ms(b: Column) -> Column:
     """dwMicroSecPerFrame x dwTotalFrames from the fixed-offset avih; NULL
-    when the frame period is zero. (The Python demux in functions/avi.py
-    counts the movi frame chunks instead — more robust, but that is a
-    sequential scan; the header math is what a JVM expression can do, and
-    the two agree on well-formed files.)"""
+    when the frame period is zero. The header count is trusted: counting
+    the movi frame chunks would need a sequential scan that a JVM
+    expression can't do, and the two agree on well-formed files."""
     usf = _le(b, 33, 4)
     frames = _le(b, 49, 4)
     # two u32s multiply past int64 (1.8e19 > 2^63) — ANSI long arithmetic
@@ -313,9 +312,9 @@ def media_format_col(b: Column) -> Column:
         .when(_is_avi(b), F.lit("avi"))
         .when(_is_mp4(b), F.lit("mp4"))
         .when(_is_bmp(b), F.lit("bmp"))
-        # Ogg/WebM/MP3 are magic-tagged only: their durations need the
-        # unbounded page/EBML/sync walks (functions/ogg.py, webm.py,
-        # mp3.py — Python probes) that a JVM fold can't express
+        # Ogg/WebM/MP3 are magic-tagged only: their durations need
+        # unbounded page/EBML/frame-sync walks that a bounded JVM fold
+        # can't express, so media_duration_col leaves them NULL
         .when(
             (F.length(b) >= 27) & (F.substring(b, 1, 4).cast("string") == "OggS"),
             F.lit("ogg"),
@@ -531,16 +530,15 @@ def synth_media_bytes(fmt: Column, w: Column, h: Column, pad: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Python mirrors of the duration walkers — the independent-reference form for
-# tests AND the real default duration probe for frame_sample_plan's
-# mapInPandas kernel (which runs Python per batch anyway, so a bytes-level
-# parse there costs nothing extra).
+# Python mirrors of the duration walkers — the independent reference the
+# tests fuzz the JVM expressions against.
 # ---------------------------------------------------------------------------
 
 def py_container_duration_ms(payload: bytes) -> int | None:
-    """WAV/MP4 duration in ms from raw container bytes; None when the
-    payload is not a recognized a/v container or is malformed. Semantics
-    mirror media_duration_col exactly (same bounded walks, same floors)."""
+    """WAV/AVI/FLAC/MP4 duration in ms from raw container bytes; None when
+    the payload is not a recognized a/v container or is malformed.
+    Semantics mirror media_duration_col exactly (same bounded walks, same
+    floors)."""
     if payload is None or len(payload) < 16:
         return None
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
@@ -564,17 +562,17 @@ def py_container_duration_ms(payload: bytes) -> int | None:
 
 
 def _py_flac_ms(b: bytes) -> int | None:
-    """Mirror of the JVM fixed-offset STREAMINFO read (NOT functions/flac.py's
-    block walk — RFC 9639 mandates STREAMINFO first, so the fixed read is
-    spec-complete). Caller has already checked the _is_flac structure."""
+    """Mirror of the JVM fixed-offset STREAMINFO read (RFC 9639 mandates
+    STREAMINFO first, so the fixed read is spec-complete). Caller has
+    already checked the _is_flac structure."""
     rate = (b[18] << 12) | (b[19] << 4) | (b[20] >> 4)
     total = ((b[21] & 0x0F) << 32) | int.from_bytes(b[22:26], "big")
     return (total * 1000) // rate if rate > 0 and total > 0 else None
 
 
 def _py_avi_ms(b: bytes) -> int | None:
-    """Mirror of the JVM fixed-offset avih read (NOT the functions/avi.py
-    chunk-count demux): canonical hdrl-first layout or None."""
+    """Mirror of the JVM fixed-offset avih read: canonical hdrl-first
+    layout or None."""
     if (len(b) < 72 or b[12:16] != b"LIST" or b[20:24] != b"hdrl"
             or b[24:28] != b"avih"):
         return None

@@ -34,14 +34,19 @@ def _collect_queries(
     # max+1 rows; limiting the *fetch* instead would turn the collect
     # into CollectLimit's iterative partition scale-up — measured ~1s of
     # extra scan jobs on the bench query set.
-    probe = queries.select(id_col).limit(max_queries + 1).count()
-    if probe > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}; brute_force_topk "
-            "collects all query vectors onto the driver. Use lsh_topk or "
-            "ivf_topk for large query sets, or raise max_queries explicitly."
-        )
+    # The collect re-evaluates the query plan, so a non-deterministic
+    # source (sample, rand, unordered limit) can pass the probe and then
+    # return more rows; the length re-check after the collect backstops it.
+    too_many = ValueError(
+        f"query set exceeds max_queries={max_queries}; brute_force_topk "
+        "collects all query vectors onto the driver. Use lsh_topk or "
+        "ivf_topk for large query sets, or raise max_queries explicitly."
+    )
+    if queries.select(id_col).limit(max_queries + 1).count() > max_queries:
+        raise too_many
     rows = queries.select(id_col, vec_col).collect()
+    if len(rows) > max_queries:
+        raise too_many
     qids = [r[id_col] for r in rows]
     Q = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
     return qids, Q

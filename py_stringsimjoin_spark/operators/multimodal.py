@@ -1,30 +1,15 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media travel as opaque ``binary`` columns with a typed metadata struct; the
-decode / feature-extraction kernels are Arrow-batched ``mapInPandas`` stages.
-Decode coverage is format-tiered and honest about it:
-
-* REAL, zero external codec: container header metadata (PNG/GIF/JPEG/AVI
-  dims, WAV/FLAC/MP4/AVI duration — JVM expressions, functions/media.py),
-  full pixel decode of 8/16-bit + Adam7 PNGs (stdlib zlib + scanline
-  unfiltering), GIF first frames (pure-Python LZW, interlace supported),
-  JPEG in all three Huffman processes — baseline, extended sequential,
-  progressive (functions/jpeg.py) — MJPEG-AVI frame demux
-  (functions/avi.py), full waveform decode of PCM WAV (numpy,
-  functions/codecs.py) and of FLAC — a fully-specified integer codec, so
-  pure Python reconstructs samples bit-exactly (functions/flac.py).
-* STUBBED: lossy audio/video (H.264/VP9/AV1/MP3) need an external
-  codec this container lacks; ``decode_fn=None`` routes those to a
-  deterministic fake decoder so the Spark-side contract — schema, batch
-  shape, partitioning, null routing — stays real and tested. Pass a real
-  decode_fn (e.g. PIL/librosa-based) in production.
+Media travel as opaque ``binary`` columns with a typed metadata struct.
+The metadata comes from the container headers alone (PNG/GIF/JPEG/BMP/AVI
+dims, WAV/FLAC/MP4/AVI duration), parsed by pure JVM expressions in
+functions/media.py: no codec library and no Python worker. Pixel and
+waveform decode is out of scope; a caller that needs features decodes the
+``binary`` column with its own codec.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,11 +30,13 @@ def attach_media_meta(
     df: DataFrame, binary_col: str, media_type: str, fmt: str | None = None
 ) -> DataFrame:
     """JVM-side metadata from the bytes themselves: n_bytes always; format +
-    width/height parsed from PNG/GIF/JPEG container headers and duration_ms
-    from the WAV RIFF chunk chain (pure expression walks, functions/media.py
-    — no codec library, no Python). ``fmt`` is the declared fallback when
-    the magic bytes are unrecognized; duration stays NULL for containers
-    that need a real demux (frame_sample_plan's injectable probe)."""
+    width/height parsed from PNG/GIF/JPEG/BMP/AVI container headers and
+    duration_ms from the WAV RIFF chunk chain, the FLAC STREAMINFO block,
+    the AVI main header or the MP4 moov/mvhd box (pure expression walks,
+    functions/media.py — no codec library, no Python). ``fmt`` is the
+    declared fallback when the magic bytes are unrecognized; duration
+    stays NULL for containers whose duration needs an unbounded walk
+    (Ogg, WebM, MP3) and for malformed headers."""
     from ..functions.media import (
         media_dims_col,
         media_duration_col,
@@ -69,180 +56,3 @@ def attach_media_meta(
             F.length(b).cast("long").alias("n_bytes"),
         ),
     )
-
-
-def _fake_decode(payload: bytes, feat_dim: int) -> np.ndarray:
-    """Deterministic fake decoder: md5-seeded pseudo-features. Stands in for
-    a real image/audio decode; same bytes → same features on every
-    executor/retry."""
-    h = hashlib.md5(payload or b"").digest()
-    seed = int.from_bytes(h[:4], "big")
-    rng = np.random.RandomState(seed)
-    return rng.rand(feat_dim).astype(np.float32)
-
-
-def extract_media_features(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    feat_dim: int = 16,
-    decode_fn=None,
-) -> DataFrame:
-    """(id, features: array<float>, n_bytes). ``decode_fn(bytes)->np.ndarray``
-    plugs in a real codec; the default decodes REAL pixels/waveforms for
-    codec-free containers (PNG via stdlib zlib, GIF via pure-Python LZW,
-    baseline/extended/progressive JPEG via functions/jpeg.py, MJPEG-AVI
-    first frames via functions/avi.py, PCM WAV via numpy —
-    functions/codecs.py — and FLAC bit-exactly via functions/flac.py) and
-    falls back to the deterministic md5 stub for formats that genuinely
-    need an external codec (lossy audio/video)."""
-    from ..functions.codecs import real_media_features
-
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-
-    def _default_decode(b: bytes) -> np.ndarray:
-        real = real_media_features(b, feat_dim)
-        return real if real is not None else _fake_decode(b, feat_dim)
-
-    fn_decode = decode_fn or _default_decode
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            feats, nbytes = [], []
-            for b in pdf[binary_col]:
-                payload = bytes(b) if b is not None else b""
-                feats.append(fn_decode(payload).tolist())
-                nbytes.append(len(payload))
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "features": feats, "n_bytes": nbytes}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, schema)
-
-
-def frame_sample_plan(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    every_ms: int = 1000,
-    duration_fn=None,
-    frame_feature_fn=None,
-    feat_dim: int = 16,
-) -> DataFrame:
-    """Video frame-sampling: (id, frame_idx, frame_ts_ms, features) rows.
-
-    ONE ``mapInPandas`` pass per video scans the binary payload exactly once
-    and emits all of its frame rows: duration probe + per-frame featurize in
-    the same kernel, so the video bytes never enter a shuffle or get
-    replicated per frame (the round-2 plan joined the full binary onto an
-    exploded timestamp table — a 1 h video at 1 fps shipped 3,600 copies of
-    its bytes; VERDICT r2 "what's wrong" #2). Frames of one video are
-    produced by one task; for balance at scale, ``df`` should arrive
-    repartitioned on ``id_col`` (uniformly sized payload partitions), which
-    is the natural layout of a pages/media table read.
-
-    The two codec touchpoints are injectable:
-
-    * ``duration_fn(bytes) -> ms``   — container demux; the default first
-      tries the REAL header parse (MJPEG-AVI counted frame chunks x frame
-      period via functions/avi.py, else functions/media.py
-      ``py_container_duration_ms``: WAV RIFF chain, MP4 moov/mvhd walk) and
-      only falls back to a deterministic pseudo-duration (1 ms per 100
-      bytes, min one frame) for containers that genuinely need a codec.
-    * ``frame_feature_fn(bytes, ts_ms) -> np.ndarray`` — frame decode +
-      featurize; the default decodes REAL pixels for MJPEG AVI frames
-      (functions/avi.py demux + the baseline-JPEG decoder, Annex K
-      fallback for DHT-less frames) and falls back to the md5-seeded fake
-      for codec-requiring formats (same bytes+ts → same features on any
-      executor/retry).
-
-    With real codecs available, pass both and nothing else changes.
-    """
-    from ..functions.avi import avi_duration_ms, decode_avi_frame, is_avi
-    from ..functions.codecs import gif_duration_ms, gif_frame_at, image_features
-    from ..functions.media import py_container_duration_ms
-
-    def _default_duration(b: bytes) -> int:
-        if is_avi(b):
-            real = avi_duration_ms(b)
-            if real is not None:
-                return max(real, 1)
-        real = gif_duration_ms(b)  # multi-frame (animated) GIFs only
-        if real is not None:
-            return max(real, 1)
-        if (b or b"")[:4] == b"OggS":  # Vorbis/Opus/FLAC page-walk granule
-            from ..functions.ogg import ogg_duration_ms
-
-            real = ogg_duration_ms(b)
-            if real is not None:
-                return max(real, 1)
-        if (b or b"")[:4] == b"\x1a\x45\xdf\xa3":  # WebM/Matroska EBML walk
-            from ..functions.webm import webm_duration_ms
-
-            real = webm_duration_ms(b)
-            if real is not None:
-                return max(real, 1)
-        from ..functions.mp3 import mp3_duration_ms
-
-        real = mp3_duration_ms(b)  # Xing frame count / CBR header math
-        if real is not None:
-            return max(real, 1)
-        real = py_container_duration_ms(b)
-        return real if real is not None else max(len(b) // 100, 1)
-
-    def _default_frame_feat(b: bytes, ts: int) -> np.ndarray:
-        if is_avi(b):
-            px = decode_avi_frame(b, ts)
-            if px is not None:
-                return image_features(px, feat_dim)
-        elif gif_duration_ms(b) is not None:  # animated GIF "video"
-            px = gif_frame_at(b, ts)
-            if px is not None:
-                return image_features(px, feat_dim)
-        return _fake_decode((b or b"") + str(ts).encode(), feat_dim)
-
-    id_type = df.schema[id_col].dataType
-    fn_dur = duration_fn or _default_duration
-    fn_feat = frame_feature_fn or _default_frame_feat
-    out_schema = T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_ts_ms", T.LongType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-    step = int(every_ms)
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, idxs, tss, feats = [], [], [], []
-            for vid, b in zip(pdf[id_col], pdf[binary_col]):
-                payload = bytes(b) if b is not None else b""
-                dur = int(fn_dur(payload))
-                # same timestamp grid as a JVM sequence(0, max(dur-1,0), step)
-                for k, ts in enumerate(range(0, max(dur, 1), step)):
-                    ids.append(vid)
-                    idxs.append(k)
-                    tss.append(ts)
-                    feats.append(fn_feat(payload, ts).tolist())
-            yield pd.DataFrame(
-                {"id": ids, "frame_idx": idxs, "frame_ts_ms": tss, "features": feats}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, out_schema)
