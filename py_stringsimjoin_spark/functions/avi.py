@@ -4,14 +4,12 @@ AVI is a RIFF container: fixed-layout chunk headers, no entropy coding.
 Walking the chunk tree needs only byte arithmetic, and when the video
 stream is MJPEG (fccHandler 'MJPG' / biCompression 'MJPG'), every frame
 chunk IS a baseline JPEG — which ``functions/jpeg.py`` decodes for real.
-Together they make ``frame_sample_plan`` sample REAL video frames for the
-one mainstream video format that needs no external codec (the honest stub
-remains for H.264/VP9/AV1, which genuinely do).
+Together they decode REAL video frames for the one mainstream video format
+that needs no external codec (H.264/VP9/AV1 genuinely do).
 
-Scale shape: demux is a sequential scan over one payload inside the
-already-declared ``mapInPandas`` batch stage — per-video Python, no
-shuffle, bytes never replicated per frame. Frame byte ranges are yielded
-lazily so sampling k frames decodes k JPEGs, not all of them.
+Scope: standalone bytes-in functions; no operator calls them and the
+package root does not export them. Demux is a sequential scan over one
+payload; sampling k frames decodes k JPEGs, not all of them.
 
 Capability positioning vs the reference: py_stringsimjoin has no media
 support (its scope is string similarity joins); this implements the
@@ -91,10 +89,9 @@ def parse_avi(payload: bytes):
     return info
 
 
-# one-slot demux memo: frame_sample_plan calls avi_frame_bytes once per
-# sampled timestamp with the SAME payload object (one bytes() per video in
-# the mapInPandas kernel); without this the demux scan would be O(frames²)
-# per video. Holding the payload reference keeps `is` comparison sound.
+# one-slot demux memo: a caller sampling several timestamps calls
+# avi_frame_bytes once per timestamp with the SAME payload object; without
+# this the demux scan would be O(frames²) per video. Holding the payload reference keeps `is` comparison sound.
 _MEMO: list = [None, None]
 
 

@@ -17,10 +17,9 @@ crawl scale a bad checksum is data, and the exactness oracle covers the
 math). Rejected as ``None``: anything malformed or truncated, reserved
 codes, and sample sizes FLAC cannot express.
 
-Scale shape: runs inside the already-declared ``mapInPandas`` batch stage
-(same as the JPEG/PNG/WAV decoders in ``functions/codecs.py``); samples
-never enter a shuffle. The per-bit rice walk is Python — fine for web
-audio clips; a codec wheel plugs into the same ``decode_fn`` hook.
+Scope: a standalone bytes-in, samples-out function; no operator calls it
+and the package root does not export it. The per-bit rice walk is pure
+Python — fine for web audio clips, not for bulk decode.
 
 Capability positioning vs the reference: py_stringsimjoin has no media
 support; this implements the brief's multimodal-decode ask.

@@ -4,10 +4,7 @@ external codec libraries.
 Huffman JPEG is fully specified by ITU-T T.81: canonical Huffman entropy
 coding, zigzag run-length AC coefficients, uniform dequantization, and a
 separable 8x8 inverse DCT — all of which numpy + pure Python express
-exactly. This closes the largest remaining "needs an external codec" gap in
-``functions/codecs.py``: JPEG payloads yield REAL pixels, so
-``extract_media_features`` emits real image features for the dominant web
-image format instead of the md5 stub.
+exactly, so JPEG payloads decode to REAL pixels without a codec library.
 
 Supported: baseline DCT (SOF0), extended sequential (SOF1), progressive
 (SOF2, full Annex G — spectral selection, successive approximation, DC/AC
@@ -20,11 +17,9 @@ Rejected as ``None`` (data, not errors): lossless/arithmetic/hierarchical
 SOFs, 12-bit precision, 4-component (CMYK) scans, truncated or corrupt
 entropy data.
 
-Scale shape: the decoder runs inside the already-declared ``mapInPandas``
-batch stage of ``extract_media_features`` / ``frame_sample_plan`` — per-batch
-Python over binary payloads that never enter a shuffle. The per-bit Huffman
-walk is pure Python (fine for thumbnail/web-image payloads; a production
-cluster with a real codec wheel plugs into the same ``decode_fn`` hook).
+Scope: a standalone bytes-in, pixels-out function; no operator calls it
+and the package root does not export it. The per-bit Huffman walk is pure
+Python (fine for thumbnail/web-image payloads, not for bulk decode).
 
 Capability positioning vs the reference: py_stringsimjoin has no media
 support (reference scope is string similarity joins); this implements the

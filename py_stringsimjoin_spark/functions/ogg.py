@@ -16,11 +16,11 @@ publish their clock in the FIRST packet + the LAST page:
 
 So duration for all three is header math only, and Ogg-FLAC decodes for
 real. Vorbis/Opus AUDIO decode still genuinely needs a codec (MDCT/CELT)
-— only their duration/metadata are real here, decode stays stub-routed.
+— only their duration/metadata are real here.
 
-Scale shape: runs inside the already-declared ``mapInPandas`` batch stage
-(same tier as functions/flac.py); the page walk is a linear scan of the
-payload, O(size), no shuffle. The JVM expression walkers cannot express
+Scope: standalone bytes-in functions (same tier as functions/flac.py); no
+operator calls them and the package root does not export them. The page
+walk is a linear scan of the payload, O(size). The JVM expression walkers cannot express
 an unbounded page chain (a 1 h stream has thousands of pages), so Ogg is
 Python-probe-only — ``media_format_col`` still tags the magic JVM-side.
 

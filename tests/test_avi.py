@@ -1,6 +1,6 @@
 """MJPEG-AVI demux tests against an independent test-side AVI WRITER.
 
-Same mirror strategy as test_jpeg/test_codecs: the test carries its own
+Same mirror strategy as test_jpeg: the test carries its own
 RIFF/AVI writer (hdrl with avih+strh+strf, movi with 00dc frame chunks,
 word alignment, idx1) built from the AVI spec independently of the demuxer
 under test. Frames are real baseline JPEGs from test_jpeg's encoder, so
@@ -153,88 +153,6 @@ def test_rejects_non_avi_and_fuzz_never_raises():
         out = decode_avi_frame(blob, 0)
         assert out is None or out.dtype == np.uint8
         avi_duration_ms(blob)
-
-
-def test_frame_sample_plan_real_avi_frames(spark):
-    """frame_sample_plan over an MJPEG AVI: one row per frame-period tick
-    with REAL per-frame image features (channel means of the source frame),
-    while an opaque payload still flows through the deterministic fake."""
-    from pyspark.sql import Row
-
-    from py_stringsimjoin_spark.operators.multimodal import frame_sample_plan
-
-    imgs, frames = _frames(4, seed=50, w=16, h=16)
-    blob = avi_write(frames, 16, 16, fps=10)  # 100ms/frame -> 400ms total
-    df = spark.createDataFrame(
-        [Row(id=1, payload=blob), Row(id=2, payload=b"opaque bytes here")])
-    rows = frame_sample_plan(df, "id", "payload", every_ms=100).collect()
-    vid = sorted((r for r in rows if r["id"] == 1), key=lambda r: r["frame_idx"])
-    assert [r["frame_ts_ms"] for r in vid] == [0, 100, 200, 300]
-    for r, img in zip(vid, imgs):
-        exp = img.reshape(-1, 3).mean(axis=0) / 255.0
-        got = np.array(r["features"][:3])
-        assert np.abs(got - exp).max() < 0.02, r["frame_idx"]
-    assert len([r for r in rows if r["id"] == 2]) > 0  # fake path intact
-
-
-def test_extract_media_features_covers_avi(spark):
-    from pyspark.sql import Row
-
-    from py_stringsimjoin_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    imgs, frames = _frames(2, seed=60, w=16, h=16)
-    blob = avi_write(frames, 16, 16, fps=5)
-    df = spark.createDataFrame([Row(id=1, payload=blob)])
-    row = extract_media_features(df, "id", "payload", feat_dim=16).collect()[0]
-    exp = imgs[0].reshape(-1, 3).mean(axis=0) / 255.0  # FIRST frame features
-    assert np.abs(np.array(row["features"][:3]) - exp).max() < 0.02
-
-
-def test_video_neardup_composition(spark):
-    """Full video-dedup composition over the REAL decode stack: MJPEG AVIs
-    -> frame_sample_plan (real per-frame features) -> mean-pooled video
-    signature -> cosine_neardup_pairs. The re-encoded copy of video A (same
-    frames at q=2) must pair with A; the unrelated video must not."""
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from py_stringsimjoin_spark.operators.ann import cosine_neardup_pairs
-    from py_stringsimjoin_spark.operators.multimodal import frame_sample_plan
-
-    # structured, DISTINCT content (random noise has near-identical feature
-    # statistics across videos — means ~0.5, flat histograms — so it cannot
-    # separate same-video from different-video)
-    yy, xx = np.meshgrid(np.arange(16), np.arange(16), indexing="ij")
-    imgs_a = [np.stack([(yy * 8 + k * 10) % 128, (xx * 8) % 128,
-                        np.full_like(yy, 20 + k)], axis=2).astype(np.uint8)
-              for k in range(4)]
-    imgs_b = [np.stack([np.full_like(yy, 230), (255 - yy * 6 - k) % 256,
-                        np.full_like(yy, 240 - k)], axis=2).astype(np.uint8)
-              for k in range(4)]
-    enc_a1 = [encode_jpeg(im, q=1) for im in imgs_a]
-    enc_a2 = [encode_jpeg(im, q=2, sub=(2, 2)) for im in imgs_a]  # re-encode
-    enc_b = [encode_jpeg(im, q=1) for im in imgs_b]
-    df = spark.createDataFrame([
-        Row(id=1, payload=avi_write(enc_a1, 16, 16, fps=10)),
-        Row(id=2, payload=avi_write(enc_a2, 16, 16, fps=10)),
-        Row(id=3, payload=avi_write(enc_b, 16, 16, fps=10)),
-    ])
-    frames = frame_sample_plan(df, "id", "payload", every_ms=100)
-    # mean-pool per-frame features into one signature per video (JVM-side:
-    # posexplode + groupBy avg, no Python)
-    pooled = (
-        frames.select("id", F.posexplode("features").alias("pos", "v"))
-        .groupBy("id", "pos").agg(F.avg("v").alias("v"))
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("s"))
-        .select("id", F.expr("transform(s, x -> float(x.v))").alias("sig"))
-    )
-    pairs = cosine_neardup_pairs(pooled, "id", "sig", threshold=0.99)
-    got = {(r["l_id"], r["r_id"]) for r in pairs.collect()}
-    assert (1, 2) in got
-    assert (1, 3) not in got and (2, 3) not in got
 
 
 def test_self_referencing_size_terminates():

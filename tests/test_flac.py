@@ -654,22 +654,3 @@ def test_fuzz_jvm_vs_python_flac_duration(spark):
             if d != py_container_duration_ms(p):
                 mism.append((i, d, py_container_duration_ms(p)))
     assert not mism, mism[:5]
-
-
-# ---------------------------------------------------------------------------
-# feature-path routing (codecs.real_media_features)
-# ---------------------------------------------------------------------------
-
-def test_real_media_features_routes_flac():
-    from py_stringsimjoin_spark.functions.codecs import (
-        audio_features,
-        real_media_features,
-    )
-
-    blob = _valid_blob()
-    feats = real_media_features(blob, feat_dim=16)
-    assert feats is not None and feats.shape == (16,)
-    arr, rate = decode_flac(blob)
-    np.testing.assert_array_equal(feats, audio_features(arr, rate, 16))
-    # duration feature reflects the real sample count (576 / 44100 s)
-    assert feats[3] == pytest.approx(576 / 44100, rel=1e-4)

@@ -1,6 +1,6 @@
 """Baseline-JPEG decoder tests against an independent test-side ENCODER.
 
-Mirror strategy (same as the PNG/GIF/LZW fixtures in test_codecs.py): the
+Mirror strategy: the
 test suite carries a minimal baseline JPEG *encoder* — forward DCT,
 uniform quantization, canonical Huffman entropy coding, byte stuffing,
 restart markers, chroma subsampling — built independently from the decoder
@@ -376,14 +376,3 @@ def test_dhtless_with_custom_tables_still_never_raises():
     blob = encode_jpeg(img, q=1, tables="test", emit_dht=False)
     out = decode_jpeg(blob)
     assert out is None or out.dtype == np.uint8
-
-
-def test_real_media_features_covers_jpeg():
-    from py_stringsimjoin_spark.functions.codecs import real_media_features
-
-    img = _rng_img(16, 16, 21)
-    feats = real_media_features(encode_jpeg(img, q=1), feat_dim=16)
-    assert feats is not None and len(feats) == 16
-    # channel means should track the source image, not an md5 stub
-    expect = img.reshape(-1, 3).mean(axis=0) / 255.0
-    assert np.abs(feats[:3] - expect).max() < 0.02

@@ -20,44 +20,7 @@ from py_stringsimjoin_spark.functions.media import (
 )
 from py_stringsimjoin_spark.operators.multimodal import attach_media_meta
 
-
-def _chunk(cid: bytes, data: bytes) -> bytes:
-    out = cid + struct.pack("<I", len(data)) + data
-    if len(data) % 2:
-        out += b"\x00"  # RIFF word alignment
-    return out
-
-
-def _lst(ltype: bytes, body: bytes) -> bytes:
-    return _chunk(b"LIST", ltype + body)
-
-
-def avi_write(frames, w, h, fps=10, total_frames=None):
-    """Canonical MJPEG AVI from JPEG frame blobs. total_frames overrides
-    the avih header count (real files often disagree with the chunk count)."""
-    n = len(frames)
-    usf = 1_000_000 // fps
-    avih = struct.pack(
-        "<14I", usf, 0, 0, 0x10, total_frames if total_frames is not None
-        else n, 0, 1, 0, w, h, 0, 0, 0, 0)
-    strh = (b"vidsMJPG"
-            + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0, n, 0, 0, 0)
-            + struct.pack("<4H", 0, 0, w, h))
-    strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG",
-                       w * h * 3, 0, 0, 0, 0)
-    hdrl = _lst(b"hdrl", _chunk(b"avih", avih)
-                + _lst(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)))
-    movi_body = b"movi"
-    offsets = []
-    for f in frames:
-        offsets.append(len(movi_body))
-        movi_body += _chunk(b"00dc", f)
-    movi = _chunk(b"LIST", movi_body)
-    idx1 = _chunk(b"idx1", b"".join(
-        b"00dc" + struct.pack("<III", 0x10, off, len(f))
-        for off, f in zip(offsets, frames)))
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+from .test_avi import avi_write
 
 
 def _avi_mut(avi: bytes, off: int, val: int) -> bytes:
@@ -316,7 +279,8 @@ def test_synth_mp4_matches_python_struct(spark):
 
 
 # duration = avih dwMicroSecPerFrame x dwTotalFrames (HEADER count: the
-# fixed-offset JVM read can't walk movi to count the frame chunks)
+# fixed-offset JVM read can't walk movi; the chunk-counting demux lives in
+# functions/avi.py and is tested in test_avi.py)
 _AVI3 = avi_write([b"\xff\xd8ab"] * 3, 640, 480, fps=10)  # usf=100000
 AVI_CASES = [
     ("avi_3frames", _AVI3, "avi", 300),
@@ -433,7 +397,10 @@ def test_bmp_format_and_dims(spark):
 
 def test_synth_avi_parses_back_and_counts(spark):
     """The JVM AVI fixture: 100 bytes, dims round-trip, duration = 40ms x
-    frames from the header count, and the Python mirror agrees."""
+    frames from the header count, the Python mirror agrees, and the Python
+    demux agrees there are zero movi frames."""
+    from py_stringsimjoin_spark.functions.avi import parse_avi
+
     df = spark.createDataFrame([Row(w=320, h=176, fr=13)])
     b = df.select(
         synth_media_bytes(F.lit("avi"), F.col("w"), F.col("h"), F.col("fr")).alias("b")
@@ -448,6 +415,9 @@ def test_synth_avi_parses_back_and_counts(spark):
     assert (r["dims"]["width"], r["dims"]["height"]) == (320, 176)
     assert r["dur"] == 40 * 13
     assert py_container_duration_ms(bytes(b)) == 40 * 13
+    info = parse_avi(bytes(b))
+    assert info is not None and info["n_frames"] == 0
+    assert (info["width"], info["height"], info["hdr_frames"]) == (320, 176, 13)
 
 
 def test_python_duration_mirror_matches_spark_cases():
@@ -523,154 +493,3 @@ def test_fuzz_jvm_vs_python_duration_mirror(spark):
         if got[i] != py_container_duration_ms(p)
     ]
     assert not mismatches, mismatches[:5]
-
-
-def _streaminfo(rate: int, nch: int, bits: int, total: int,
-                extra_block: bytes | None = None) -> bytes:
-    """'fLaC' + a STREAMINFO block (4096-sample blocks, unknown frame sizes,
-    zero MD5), optionally followed by a last PADDING block."""
-    d = bytearray()
-    d += (4096).to_bytes(2, "big") * 2   # min/max blocksize
-    d += b"\x00" * 6                     # min/max framesize unknown
-    packed = (rate << 44) | ((nch - 1) << 41) | ((bits - 1) << 36) | total
-    d += packed.to_bytes(8, "big")
-    d += b"\x00" * 16                    # md5 unset
-    out = bytearray(b"fLaC")
-    if extra_block is not None:
-        out += bytes([0x00]) + len(d).to_bytes(3, "big") + d
-        out += bytes([0x80 | 0x01]) + len(extra_block).to_bytes(3, "big")
-        out += extra_block               # last block: PADDING (type 1)
-    else:
-        out += bytes([0x80]) + len(d).to_bytes(3, "big") + d
-    return bytes(out)
-
-
-def test_synth_flac_fixture_and_attach_media_meta(spark):
-    """synth_media_bytes('flac', rate, total) emits a spec-valid 42-byte
-    stream head, byte-identical to the Python builder, and the Python
-    mirror and the JVM attach_media_meta agree on its duration."""
-    cases = [(8000, 1), (44100, 441000), (48000, 0), (192000, (1 << 36) - 1)]
-    df = spark.createDataFrame([Row(i=i, w=r, h=t)
-                                for i, (r, t) in enumerate(cases)])
-    media = df.select(
-        "i", synth_media_bytes(F.lit("flac"), F.col("w"), F.col("h"),
-                               F.lit(0)).alias("payload")
-    )
-    meta = {
-        r["i"]: (r["media_meta"], bytes(r["payload"]))
-        for r in attach_media_meta(media, "payload", "audio").collect()
-    }
-    for i, (rate, total) in enumerate(cases):
-        m, payload = meta[i]
-        want = (total * 1000) // rate if total else None
-        assert payload == _streaminfo(rate, 1, 16, total)
-        assert len(payload) == 42 and m["n_bytes"] == 42
-        assert m["format"] == "flac" and m["width"] is None
-        assert m["duration_ms"] == want
-        assert py_container_duration_ms(payload) == want
-
-
-def test_fuzz_jvm_vs_python_flac_duration(spark):
-    """Cross-engine mirror fuzz: truncations/mutations/noise over valid
-    FLAC heads must yield the SAME duration from the JVM fixed-offset read
-    and py_container_duration_ms (both may be None, never different)."""
-    rng = random.Random(99)
-    base = [
-        _streaminfo(44100, 2, 16, 441000),
-        _streaminfo(8000, 1, 8, 1),
-        _streaminfo(0, 1, 16, 500),        # invalid zero rate
-        _streaminfo(1048575, 8, 32, (1 << 36) - 1),
-        # STREAMINFO not last (a PADDING block follows), then frame bytes
-        _streaminfo(44100, 2, 16, 576, extra_block=b"\x00" * 8)
-        + b"\xff\xf8\x69\x08" + bytes(range(60)),
-    ]
-    blobs = []
-    for payload in base:
-        blobs.append(payload)
-        for cut in (3, 4, 7, 17, 25, 41, len(payload) - 1):
-            blobs.append(payload[:cut])
-        for _ in range(40):
-            m = bytearray(payload)
-            m[rng.randrange(min(len(m), 42))] = rng.randrange(256)
-            blobs.append(bytes(m))
-    for _ in range(40):
-        blobs.append(bytes(rng.randrange(256)
-                           for _ in range(rng.randrange(0, 60))))
-
-    rows = [Row(i=i, payload=p) for i, p in enumerate(blobs)]
-    got = {
-        r["i"]: (r["d"], r["f"])
-        for r in spark.createDataFrame(rows)
-        .select(
-            "i",
-            media_duration_col(F.col("payload")).alias("d"),
-            media_format_col(F.col("payload")).alias("f"),
-        )
-        .collect()
-    }
-    mism = []
-    for i, p in enumerate(blobs):
-        d, f = got[i]
-        if f == "flac" or (p[:4] == b"fLaC" and len(p) >= 42):
-            if d != py_container_duration_ms(p):
-                mism.append((i, d, py_container_duration_ms(p)))
-    assert not mism, mism[:5]
-
-
-def _ogg_page(packet: bytes, granule: int) -> bytes:
-    """One RFC 3533 page (first and last of its stream) carrying one
-    packet; the CRC is left zero."""
-    q, r = divmod(len(packet), 255)
-    laces = [255] * q + [r]
-    return (b"OggS" + bytes([0, 0x02 | 0x04]) + struct.pack("<q", granule)
-            + struct.pack("<I", 0x1234) + struct.pack("<I", 0)
-            + b"\x00\x00\x00\x00" + bytes([len(laces)]) + bytes(laces) + packet)
-
-
-def _ebml(eid: int, payload: bytes) -> bytes:
-    """EBML element with a one-byte size (payloads under 127 bytes)."""
-    return (eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-            + bytes([0x80 | len(payload)]) + payload)
-
-
-def _webm(duration_ms: float) -> bytes:
-    """EBML header + Segment[Info[TimestampScale 1 ms, Duration]]."""
-    info = (_ebml(0x2AD7B1, (1_000_000).to_bytes(3, "big"))
-            + _ebml(0x4489, struct.pack(">f", duration_ms)))
-    return (_ebml(0x1A45DFA3, _ebml(0x4282, b"webm"))
-            + _ebml(0x18538067, _ebml(0x1549A966, info)))
-
-
-def _mp3(id3_pad: int = 0) -> bytes:
-    """Optional ID3v2 tag of ``id3_pad`` bytes, then one MPEG-1 Layer III
-    frame header (128 kbit/s, 44.1 kHz) and a zero-filled frame body."""
-    out = b""
-    if id3_pad:
-        out += b"ID3\x04\x00\x00" + bytes(
-            [(id3_pad >> 21) & 0x7F, (id3_pad >> 14) & 0x7F,
-             (id3_pad >> 7) & 0x7F, id3_pad & 0x7F]) + b"\x00" * id3_pad
-    return out + b"\xff\xfb\x90\x00" + b"\x00" * 413
-
-
-def test_jvm_tags_ogg_webm_mp3_and_duration_stays_null(spark):
-    """media_format_col tags the OggS magic as 'ogg', EBML as 'webm' and
-    ID3 or a raw frame sync as 'mp3'; their durations need unbounded walks,
-    so they stay NULL on BOTH engines."""
-    blobs = {
-        "ogg": _ogg_page(b"\x01vorbis" + b"\x00" * 23, granule=44100),
-        "webm": _webm(2500.0),
-        "mp3_id3": _mp3(id3_pad=11),
-        "mp3_sync": _mp3(),
-    }
-    df = spark.createDataFrame([Row(name=k, payload=v) for k, v in blobs.items()])
-    rows = {
-        r["name"]: (r["f"], r["d"])
-        for r in df.select(
-            "name",
-            media_format_col(F.col("payload")).alias("f"),
-            media_duration_col(F.col("payload")).alias("d"),
-        ).collect()
-    }
-    assert rows == {"ogg": ("ogg", None), "webm": ("webm", None),
-                    "mp3_id3": ("mp3", None), "mp3_sync": ("mp3", None)}
-    assert all(py_container_duration_ms(v) is None for v in blobs.values())

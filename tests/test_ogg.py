@@ -13,7 +13,6 @@ import random
 import struct
 
 import numpy as np
-import pytest
 
 from py_stringsimjoin_spark.functions.ogg import (
     decode_ogg_flac,
@@ -164,8 +163,7 @@ def test_fuzz_never_raises():
 
 def test_jvm_tags_ogg_and_duration_stays_null(spark):
     """media_format_col tags the OggS magic; duration is honestly NULL on
-    BOTH engines (the unbounded page walk is Python-probe-only), and the
-    frame_sample_plan default probe picks up the real granule duration."""
+    BOTH engines (the unbounded page walk is Python-probe-only)."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
@@ -187,21 +185,3 @@ def test_jvm_tags_ogg_and_duration_stays_null(spark):
     )
     assert row["f"] == "ogg" and row["d"] is None
     assert py_container_duration_ms(blob) is None  # mirror agrees
-
-    from py_stringsimjoin_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame([Row(id=1, payload=blob)])
-    rows = frame_sample_plan(df, "id", "payload", every_ms=10).collect()
-    want_ms = total * 1000 // 44100
-    assert len(rows) == (max(want_ms, 1) + 9) // 10
-
-
-def test_real_media_features_routes_ogg_flac():
-    from py_stringsimjoin_spark.functions.codecs import real_media_features
-
-    pkts, _, total = _flac_packets(seed=19, nframes=2)
-    blob = mux_ogg(pkts, final_granule=total)
-    feats = real_media_features(blob, feat_dim=16)
-    assert feats is not None and feats.shape == (16,)
-    assert not np.isnan(feats).any()
-    assert feats[3] == pytest.approx(total / 44100, rel=1e-4)
