@@ -2,7 +2,7 @@
 
 Beyond-reference operator (py_stringsimjoin has no asymmetric set measure;
 the kernel composition mirrors its filter-verify design,
-/root/reference/py_stringsimjoin/join/set_sim_join.py:16-139): containment
+py_stringsimjoin/join/set_sim_join.py:16-139): containment
 is the standard web-corpus "document A is (mostly) quoted inside B" measure
 — with a q-gram/shingle tokenizer it detects near-containment of one page's
 text in another regardless of how much *extra* content the right side has,
@@ -19,7 +19,8 @@ Physical plan — the asymmetry is the interesting part:
       exploded stream, plans/skew.exploded_hot_token_ranks)
     → size bound:      |r| ≥ ⌈t·|l|⌉            (|∩| ≤ |r|)
     → position bound:  1 + min(|l|−lp−1, |r|−rp−1) ≥ ⌈t·|l|⌉  per joined row
-    → JVM array_intersect exact verify, score = |∩| / |l|  (zero UDF)
+    → inline JVM array_intersect exact verify, score = |∩| / |l|  (zero UDF)
+    → distinct over verified matches
 
 Soundness of the left prefix: a qualifying pair shares o = ⌈t·|l|⌉ tokens;
 only o−1 left tokens sit outside the ℓ = |l|−o+1 prefix, so at least one
@@ -27,10 +28,11 @@ shared token is inside it, and the unfiltered right side guarantees the
 join sees that token.
 
 Scale shape: one large shuffle (the token join). The right side exploding
-fully costs Σ|r| join-input rows — same as the overlap/OC joins and the
-count strategy of the symmetric kernel; the left prefix cuts the probe side
-by ~t. The pair aggregation runs on the packed primitive long whenever both
-keys fit in 32 bits (plans/pairkey.py).
+fully costs Σ|r| join-input rows — same as the overlap/OC joins; the left
+prefix cuts the probe side by ~t. The ranked arrays ride through the
+explode so the verify runs inline in the join stage, and the one post-join
+shuffle is the distinct over verified matches, on the packed primitive long
+whenever both keys fit in 32 bits (plans/pairkey.py).
 
 ``allow_empty`` mirrors overlap_coefficient's semantics: only (∅,∅) pairs
 score 1.0 (containment of ∅ is vacuous; emitting ∅-in-everything rows would
@@ -47,8 +49,7 @@ from pyspark.sql import functions as F
 
 from ..plans.cache import tracked_cache as _tc
 from ..plans.output import assemble_output
-from ..plans.pairkey import resolve_pair_packer
-from ..plans.stats import sample_plan_stats
+from ..plans.pairkey import distinct_pairs, resolve_pair_packer
 from ..plans.validation import (
     COMP_OP_FN,
     validate_attr,
@@ -165,26 +166,16 @@ def containment_join_pairs(
             .transform(_tc)
         )
 
-    # inline-vs-rejoin verify: same 64-token break-even as the symmetric
-    # kernel (set_sim_join.py — array-replication bytes vs candidate-shuffle
-    # bytes); one bounded-sample stats job.
-    sides = [(l_proj, "_l_str")] + ([] if is_self else [(r_proj, "_r_str")])
-    st = sample_plan_stats(
-        sides, tokenizer=tok,
-        prefix_col_fn=lambda sz: _prefix_len_col(sz, threshold),
-    )
-    inline_verify = st["avg_size"] <= 64
-
     pl = l_rk.withColumn("_pfx", _prefix_len_col(F.col("_l_size"), threshold)).select(
         "_l_key",
         "_l_size",
-        *(["_l_ranked"] if inline_verify else []),
+        "_l_ranked",
         F.posexplode(F.expr("slice(_l_ranked, 1, _pfx)")).alias("_l_pos", "_tok"),
     )
     pr = r_rk.select(
         "_r_key",
         "_r_size",
-        *(["_r_ranked"] if inline_verify else []),
+        "_r_ranked",
         F.posexplode("_r_ranked").alias("_r_pos", "_tok"),
     )
 
@@ -200,7 +191,7 @@ def containment_join_pairs(
     hot = exploded_hot_token_ranks(probe, n_salts)
 
     joined = salted_token_join(
-        pl, pr, hot, n_salts, "_l_key", pin_partitions=n_shuffle
+        pl, pr, hot, pin_partitions=n_shuffle
     ).where(F.col("_r_size") >= _ov_needed_col(F.col("_l_size"), threshold))
     if exclude_self_pairs:
         joined = joined.where(F.col("_l_key") != F.col("_r_key"))
@@ -215,56 +206,15 @@ def containment_join_pairs(
         )
         joined = joined.where(ub >= _ov_needed_col(F.col("_l_size"), threshold))
 
-    packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
-
-    def _distinct_pairs(df):
-        if packer is None:
-            return df.select("_l_key", "_r_key").distinct()
-        return (
-            df.select(packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"))
-            .distinct()
-            .select(
-                packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                packer.unpack_r(F.col("_pk")).alias("_r_key"),
-            )
-        )
-
-    if inline_verify:
-        verify_in = joined
-    else:
-        cand = _distinct_pairs(joined)
-        verify_in = (
-            cand.join(l_rk.select("_l_key", "_l_ranked"), "_l_key")
-            .join(r_rk.select("_r_key", "_r_ranked"), "_r_key")
-            .select("_l_key", "_r_key", "_l_ranked", "_r_ranked")
-        )
-
     ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
     ls = F.size("_l_ranked").cast("double")
-    scored = verify_in.withColumn("_sim_score", ov / ls).where(
+    scored = joined.withColumn("_sim_score", ov / ls).where(
         _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(float(threshold)))
     )
-    if inline_verify:
-        # the joined stream holds one row per shared prefix×full token — the
-        # verified-match distinct is the only post-join shuffle
-        if packer is None:
-            pairs = scored.select("_l_key", "_r_key", "_sim_score").distinct()
-        else:
-            pairs = (
-                scored.select(
-                    packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"),
-                    "_sim_score",
-                )
-                .groupBy("_pk")
-                .agg(F.min("_sim_score").alias("_sim_score"))
-                .select(
-                    packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                    packer.unpack_r(F.col("_pk")).alias("_r_key"),
-                    "_sim_score",
-                )
-            )
-    else:
-        pairs = scored.select("_l_key", "_r_key", "_sim_score")
+    # the joined stream holds one row per shared prefix×full token — the
+    # verified-match distinct is the only post-join shuffle
+    packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
+    pairs = distinct_pairs(scored, packer, "_sim_score")
 
     if allow_empty and COMP_OP_FN[comp_op](1.0, threshold):
         l_empty = l_rk.where(F.col("_l_size") == 0).select("_l_key")

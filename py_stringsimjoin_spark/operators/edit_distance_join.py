@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.tokenizers import QgramTokenizer
 from ..plans import filter_math as fm
 from ..plans.output import assemble_output
-from ..plans.pairkey import resolve_pair_packer
-from ..plans.stats import dup_value_stats, value_hash_col
+from ..plans.pairkey import distinct_pairs, resolve_pair_packer
+from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     validate_attr,
     validate_attr_type,
@@ -44,6 +44,7 @@ from .missing_pairs import missing_pairs
 from .token_ordering import add_ranked_tokens, build_token_ordering
 from ..plans.cache import tracked_cache as _tc
 from ..plans.skew import (
+    SALT_PROBE_MIN_ROWS,
     exploded_hot_token_ranks,
     resolve_salt_parallelism,
     salted_token_join,
@@ -108,8 +109,9 @@ def edit_distance_join(
         sides = [(ltable, l_join_attr)]
         if not is_self_t:
             sides.append((rtable, r_join_attr))
-        n_est, nd_est = dup_value_stats(sides)  # ONE stats job (plans/stats.py)
-        value_dedup = n_est > 0 and nd_est / n_est < 0.6
+        st = sample_plan_stats(sides)  # ONE stats job (plans/stats.py)
+        nd_est = st["nd"]
+        value_dedup = st["n"] > 0 and nd_est / st["n"] < 0.6
     if value_dedup:
         lv = ltable.select(F.col(l_join_attr).alias("_v")).where(
             F.col("_v").isNotNull()
@@ -239,10 +241,9 @@ def edit_distance_join(
     # distinct-value count), skip the hot-token probe job and the exchange
     # pinning — below this row count the worst-case unbalanced join is
     # sub-second while the probe + pinned exchanges dominate.
-    probe_min = int(
-        ltable.sparkSession.conf.get("spark.py_stringsimjoin.saltProbeMinRows", "4096")
+    tiny_join = (
+        _join_rows_hint is not None and 0 < _join_rows_hint < SALT_PROBE_MIN_ROWS
     )
-    tiny_join = _join_rows_hint is not None and 0 < _join_rows_hint < probe_min
     pin_n = None if tiny_join else n_shuffle
     if tiny_join:
         hot = {}
@@ -276,32 +277,17 @@ def edit_distance_join(
     else:  # "="
         keep = dd == t_int
     verified = (
-        salted_token_join(pl, pr, hot, n_salts, "_l_key", pin_partitions=pin_n)
+        salted_token_join(pl, pr, hot, pin_partitions=pin_n)
         .where(F.abs(F.col("_l_len") - F.col("_r_len")) <= t_int)
         .where(ub >= alpha)
         .withColumn("_d", F.levenshtein(F.col("_l_str"), F.col("_r_str"), t_int))
         .where(keep)
+        .withColumn("_sim_score", dd.cast("double"))
     )
     # dedup the verified matches through a packed primitive key when the key
     # dtypes allow it (plans/pairkey.py) — same spill math as set_sim_join
     packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
-    if packer is not None:
-        pairs = (
-            verified.select(
-                packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"),
-                dd.cast("double").alias("_sim_score"),
-            )
-            .distinct()
-            .select(
-                packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                packer.unpack_r(F.col("_pk")).alias("_r_key"),
-                "_sim_score",
-            )
-        )
-    else:
-        pairs = verified.select(
-            "_l_key", "_r_key", dd.cast("double").alias("_sim_score")
-        ).distinct()
+    pairs = distinct_pairs(verified, packer, "_sim_score")
 
     if allow_missing:
         pairs = pairs.unionByName(

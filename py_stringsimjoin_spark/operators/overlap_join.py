@@ -20,8 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.output import assemble_output
-from ..plans.stats import value_dedup_auto as _stats_value_dedup_auto
-from ..plans.stats import value_hash_col
+from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     COMP_OP_FN,
     validate_attr,
@@ -51,15 +50,6 @@ _COMP_COL = {
 
 def comp_col(comp_op: str, col: Column, threshold) -> Column:
     return _COMP_COL[comp_op](col, F.lit(threshold))
-
-
-def _value_dedup_auto(ltable, rtable, l_join_attr, r_join_attr, is_self: bool) -> bool:
-    """Shared dup-heavy detection (see set_sim_join.value_dedup): ONE stats
-    job via plans/stats.dup_value_stats; True when distinct/total < 0.6."""
-    sides = [(ltable, l_join_attr)]
-    if not is_self:
-        sides.append((rtable, r_join_attr))
-    return _stats_value_dedup_auto(sides)
 
 
 def _expand_value_pairs(vpairs, ltable, rtable, l_key_attr, r_key_attr,
@@ -175,7 +165,10 @@ def overlap_join(
 
     is_self = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
     if value_dedup == "auto":
-        value_dedup = _value_dedup_auto(ltable, rtable, l_join_attr, r_join_attr, is_self)
+        st = sample_plan_stats(
+            [(ltable, l_join_attr)] + ([] if is_self else [(rtable, r_join_attr)])
+        )
+        value_dedup = st["n"] > 0 and st["nd"] / st["n"] < 0.6
     if value_dedup:
         lv = ltable.select(F.col(l_join_attr).alias("_v")).where(
             F.col("_v").isNotNull()).distinct()
@@ -245,7 +238,10 @@ def overlap_coefficient_join(
 
     is_self = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
     if value_dedup == "auto":
-        value_dedup = _value_dedup_auto(ltable, rtable, l_join_attr, r_join_attr, is_self)
+        st = sample_plan_stats(
+            [(ltable, l_join_attr)] + ([] if is_self else [(rtable, r_join_attr)])
+        )
+        value_dedup = st["n"] > 0 and st["nd"] / st["n"] < 0.6
     if value_dedup:
         lv = ltable.select(F.col(l_join_attr).alias("_v")).where(
             F.col("_v").isNotNull()).distinct()

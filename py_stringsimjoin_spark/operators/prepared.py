@@ -101,10 +101,9 @@ class PreparedSetSimCorpus:
             ranked = persist_tracked(ranked)
         self.ordering = ordering
         self.ranked = ranked
-        # plan-time estimates shared by every join over this corpus
-        # (prefix fraction is threshold-dependent, so only the generic pieces
-        # are cached; join_pairs fills avg_pfx per call from avg_size)
-        self.stats = sample_plan_stats([(proj, "_l_str")], tokenizer=self.tokenizer)
+        # the sampled row count every join over this corpus hands to the
+        # kernel's tiny-join gate
+        self.stats = sample_plan_stats([(proj, "_l_str")])
 
     @classmethod
     def load(
@@ -142,7 +141,7 @@ class PreparedSetSimCorpus:
         proj = table.select(
             F.col(key_attr).alias("_l_key"), F.col(join_attr).alias("_l_str")
         )
-        self.stats = sample_plan_stats([(proj, "_l_str")], tokenizer=self.tokenizer)
+        self.stats = sample_plan_stats([(proj, "_l_str")])
         return self
 
     def resolve_packer(self):
@@ -151,8 +150,7 @@ class PreparedSetSimCorpus:
         For long-typed keys ``plans.pairkey.resolve_pair_packer`` costs a
         column-pruned min/max job; its answer is a property of the corpus,
         not of the threshold — so threshold sweeps over a prepared corpus
-        must not re-pay it per call. (The ``pairKeyPacking`` conf is read at
-        first resolution; flip it before the first join, not mid-sweep.)
+        must not re-pay it per call.
         """
         if not hasattr(self, "_packer_resolved"):
             from ..plans.pairkey import resolve_pair_packer
@@ -173,19 +171,12 @@ class PreparedSetSimCorpus:
         position_filter: bool = True,
         self_join_dedup: bool = False,
         verify: bool = True,
-        strategy: str = "auto",
         shuffle_partitions: int | None = None,
     ) -> DataFrame:
         """Self-join this corpus → DataFrame(_l_key, _r_key, _sim_score).
 
         Identical semantics to ``set_sim_join_pairs`` on the original table
         (oracle-checked in tests); preparation stages are skipped."""
-        stats = dict(self.stats)
-        # the cached stats carry avg token-set size; derive the per-call
-        # prefix estimate with the same formula the sampler would use
-        stats["avg_pfx"] = float(
-            fm.prefix_length(max(int(round(stats["avg_size"])), 1), measure, threshold)
-        )
         return set_sim_join_pairs(
             measure,
             self.table,
@@ -202,10 +193,8 @@ class PreparedSetSimCorpus:
             position_filter=position_filter,
             self_join_dedup=self_join_dedup,
             verify=verify,
-            strategy=strategy,
             value_dedup=False,
             shuffle_partitions=shuffle_partitions,
-            _plan_stats=stats,
             _prepared=self,
         )
 

@@ -1,24 +1,26 @@
 """Set-similarity joins (Jaccard / cosine / Dice) — the engine's core kernel.
 
 Capability parity with the reference's jaccard/cosine/dice joins
-(/root/reference/py_stringsimjoin/join/jaccard_join_py.py:17,
-cosine_join_py.py:17, dice_join_py.py:17; shared kernel
-join/set_sim_join.py:16-139) re-architected as one declarative Spark plan:
+(py_stringsimjoin/join/jaccard_join_py.py:17, cosine_join_py.py:17,
+dice_join_py.py:17; shared kernel join/set_sim_join.py:16-139), kept to
+that kernel's ONE plan — prefix filter, position filter, exact verify —
+re-architected as one declarative Spark plan:
 
     tokenize (set) → global token ordering → ranked int arrays
-    → prefix explode  ℓ(n) lowest-rank tokens          [filter §2.3]
+    → prefix explode  ℓ(n) lowest-rank tokens, arrays riding along [§2.3]
     → hash equi-join on token rank                     [the "index"]
     → size-bound filter on (l_size, r_size)            [size filter]
-    → groupBy pair, min-rank match → position bound    [position filter]
-    → JVM array_intersect exact verify                 [zero UDF end-to-end]
+    → per-joined-row positional overlap bound          [position filter]
+    → inline JVM array_intersect exact verify          [zero UDF end-to-end]
+    → distinct over verified matches
     → empty-pair / missing-pair unions → output assembly
 
 Catalyst/AQE notes: the token equi-join is the only large shuffle; hot
-tokens are salted by measured frequency (plans/skew.py) and AQE skew join
-covers the rest. The position bound and the final verify are plain column
-arithmetic (JVM, whole-stage codegen — no Python anywhere in the plan).
-Scores are float64, unrounded (the reference's default-Cython semantics,
-set_sim_join_cy.pyx:132).
+tokens are salted by their frequency in the prefix stream (plans/skew.py)
+and AQE skew join covers the rest. The position bound and the verify are
+plain column arithmetic (JVM, whole-stage codegen — no Python anywhere in
+the plan). Scores are float64, unrounded (the reference's default-Cython
+semantics, set_sim_join_cy.pyx:132).
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.tokenizers import Tokenizer
 from ..plans import filter_math as fm
 from ..plans.output import assemble_output
-from ..plans.pairkey import resolve_pair_packer
+from ..plans.pairkey import distinct_pairs, resolve_pair_packer
 from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     COMP_OP_FN,
@@ -46,8 +48,8 @@ from .missing_pairs import missing_pairs
 from .token_ordering import add_ranked_tokens, build_token_ordering
 from ..plans.cache import tracked_cache as _tc
 from ..plans.skew import (
+    SALT_PROBE_MIN_ROWS,
     exploded_hot_token_ranks,
-    hot_token_ranks,
     resolve_salt_parallelism,
     salted_token_join,
 )
@@ -113,10 +115,8 @@ def set_sim_join_pairs(
     position_filter: bool = True,
     self_join_dedup: bool = False,
     verify: bool = True,
-    strategy: str = "auto",
     value_dedup: bool | str = "auto",
     shuffle_partitions: int | None = None,
-    _plan_stats: dict | None = None,
     _prepared=None,
     _join_rows_hint: int | None = None,
 ) -> DataFrame:
@@ -132,36 +132,21 @@ def set_sim_join_pairs(
 
     ``self_join_dedup=True`` (self-join deduplication for clustering
     pipelines) keeps only _l_key < _r_key pairs, applied *before* the
-    groupBy so the shuffle halves. ``verify=False`` stops after the
+    pair distinct so its shuffle halves. ``verify=False`` stops after the
     filter stack and returns candidate pairs without scores (blocking
     mode; _sim_score column absent).
 
-    ``strategy``: physical-plan choice, the engine's one cost-based
-    decision (Catalyst can't see it — it's domain logic):
-      * ``"prefix"``  — prefix-explode + filters + JVM array-intersect verify;
-        wins when prefixes are much shorter than token sets (long texts,
-        high thresholds).
-      * ``"count"``   — explode ALL tokens, equi-join, groupBy-count =
-        exact overlap, score as pure JVM arithmetic (zero UDF); wins when
-        ℓ(n) ≈ n (short token sets / low thresholds), where the prefix
-        plan pays its extra joins + Python stage for no pruning.
-      * ``"auto"``    — picks between them from the shared bounded-sample
-        stats job (plans/stats.sample_plan_stats; O(sample) cost at any
-        corpus size): count when the prefix would keep >60% of tokens or
-        sets average ≤4 tokens.
-
-    ``value_dedup``: the second cost-based decision — dup-heavy corpora
+    ``value_dedup``: the kernel's one cost-based decision — dup-heavy corpora
     (re-crawled pages, repeated product names) make the row-level join
     quadratic in the duplicate count for no information: similarity is a
     function of the VALUE, not the row. When the distinct/total ratio of
-    the join attrs drops below 0.6 (estimated by the same bounded-sample
-    stats job — a limit() read, not a corpus scan),
-    the join runs on distinct values only and the result is expanded back
+    the join attrs drops below 0.6 (estimated by one bounded-sample stats
+    job — a limit() read, not a corpus scan), the join runs on distinct values only and the result is expanded back
     to rows by two equality joins — identical output, work shrinks by the
     duplication factor squared. ``True``/``False`` force the choice.
     """
     if measure == "overlap_coefficient":
-        # the prefix/count kernels assume size-monotone bounds; OC has none —
+        # the prefix kernel assumes size-monotone bounds; OC has none —
         # its inverted-index plan lives in overlap_join.overlap_coefficient_join
         raise ValueError(
             "overlap_coefficient is not supported by set_sim_join_pairs; "
@@ -197,6 +182,9 @@ def set_sim_join_pairs(
     # cache (halves the prep work for clustering/dedup pipelines)
     is_self = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
 
+    # value dedup is decided from ONE bounded-sample stats job
+    # (plans/stats.sample_plan_stats); a prepared corpus carries its own
+    plan_stats = None
     if _prepared is not None:
         # prepared self-corpus (operators/prepared.py): the ordering and the
         # ranked arrays are reused as-is — tokenize / ordering-build / rank
@@ -205,31 +193,14 @@ def set_sim_join_pairs(
         if not is_self:
             raise ValueError("prepared corpora support self-joins only")
         value_dedup = False
-        if _plan_stats is None:
-            _plan_stats = _prepared.stats
-
-    # All three plan-time decisions (value dedup, prefix-vs-count strategy,
-    # inline-vs-rejoin verify) share ONE bounded-sample stats job
-    # (plans/stats.sample_plan_stats), computed lazily on first need and
-    # passed down to the value-dedup recursion so it is never repeated.
-    plan_stats = _plan_stats
-
-    def get_stats() -> dict:
-        nonlocal plan_stats
+        plan_stats = _prepared.stats
+    if value_dedup == "auto":
         if plan_stats is None:
             sides = [(l_proj, "_l_str")]
             if not is_self:
                 sides.append((r_proj, "_r_str"))
-            plan_stats = sample_plan_stats(
-                sides,
-                tokenizer=tok,
-                prefix_col_fn=lambda sz: fm.prefix_length_col(sz, measure, threshold),
-            )
-        return plan_stats
-
-    if value_dedup == "auto":
-        st = get_stats()
-        value_dedup = st["n"] > 0 and st["nd"] / st["n"] < 0.6
+            plan_stats = sample_plan_stats(sides)
+        value_dedup = plan_stats["n"] > 0 and plan_stats["nd"] / plan_stats["n"] < 0.6
     if value_dedup:
         lv = l_proj.where(F.col("_l_str").isNotNull()).select(
             F.col("_l_str").alias("_v")
@@ -243,8 +214,8 @@ def set_sim_join_pairs(
             measure, lv, rv, "_v", "_v", "_v", "_v", tokenizer, threshold,
             comp_op, allow_empty, allow_missing=False,
             position_filter=position_filter, self_join_dedup=False,
-            verify=verify, strategy=strategy, value_dedup=False,
-            shuffle_partitions=shuffle_partitions, _plan_stats=plan_stats,
+            verify=verify, value_dedup=False,
+            shuffle_partitions=shuffle_partitions,
             # the inner join's row count is the DISTINCT-value count, not the
             # corpus row count — pass it so the tiny-join gate below can skip
             # the salt probe + exchange pinning for e.g. a 64-value join
@@ -276,7 +247,6 @@ def set_sim_join_pairs(
             out = out.unionByName(mp)
         return out
     if _prepared is not None:
-        ordering = _prepared.ordering
         l_rk = _prepared.ranked
         r_rk = l_rk.select(
             F.col("_l_key").alias("_r_key"),
@@ -305,30 +275,6 @@ def set_sim_join_pairs(
             r_nn, ["_r_key"], "_tokens", ordering, "_r_ranked", "_r_size"
         ).select("_r_key", "_r_ranked", "_r_size").persist().transform(_tc)
 
-    if strategy not in ("auto", "prefix", "count"):
-        raise AssertionError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        st = get_stats()
-        avg_size = st["avg_size"]
-        avg_pfx = st["avg_pfx"]
-        # Count wins only when its one advantage — narrow rows through the
-        # token-join exchange instead of ranked arrays — is material, i.e.
-        # wide sets at low thresholds (prefix ≈ full set AND arrays ≫ the
-        # narrow row). For short sets prefix+inline-verify dominates
-        # structurally: its post-join hash state is the VERIFIED matches
-        # (a subset of count's candidate-pair agg state, 15× smaller on the
-        # dup-heavy x2 part kernel) and the position filter prunes joined
-        # rows inside codegen. Measured sf0.1 local[16], x2 part rowlevel:
-        # prefix 30.5s vs count ~42s — the pre-round-4 rule (count whenever
-        # avg_size ≤ 4) dated from the mapInPandas verify era, when prefix
-        # paid a Python stage per candidate; the inline JVM array_intersect
-        # removed that cost entirely.
-        strategy = (
-            "count"
-            if avg_size > 8 and avg_pfx / avg_size > 0.6
-            else "prefix"
-        )
-
     n_shuffle = shuffle_partitions or int(
         ltable.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
@@ -340,22 +286,12 @@ def set_sim_join_pairs(
     # count even the worst-case single-bucket join is sub-second while the
     # probe job + two pinned exchanges dominate the query. Never pays a new
     # job: with no hint and no stats the full probe path runs as before.
-    # ``spark.py_stringsimjoin.saltProbeMinRows`` (default 4096) tunes it;
-    # 0 disables the gate.
-    probe_min = int(
-        ltable.sparkSession.conf.get("spark.py_stringsimjoin.saltProbeMinRows", "4096")
-    )
     est_rows = _join_rows_hint
     if est_rows is None and plan_stats is not None:
         est_rows = plan_stats.get("n")
-    tiny_join = est_rows is not None and 0 < est_rows < probe_min
-    pin_n = None if tiny_join else n_shuffle
+    tiny_join = est_rows is not None and 0 < est_rows < SALT_PROBE_MIN_ROWS
     if tiny_join:
         hot = {}
-    elif strategy == "count":
-        # full-token explode: the global ordering frequencies ARE the join
-        # stream frequencies, so the zero-job global rule is exact here
-        hot = hot_token_ranks(ordering, n_salts)
     else:
         # prefix explode keeps each record's RAREST tokens — hotness must be
         # measured on the prefix stream itself or templated near-dup corpora
@@ -373,8 +309,8 @@ def set_sim_join_pairs(
                 ).select(F.explode(F.expr("slice(_r_ranked, 1, _pfx)")).alias("_tok"))
             )
         hot = exploded_hot_token_ranks(probe, n_salts)
-    # Every strategy ends in a hash aggregation keyed by the candidate pair
-    # (groupBy / distinct) — the plan's spill-dominant stage on dup-heavy
+    # The plan ends in a hash aggregation keyed by the candidate pair (the
+    # distinct over matches) — the spill-dominant stage on dup-heavy
     # corpora. When both keys provably fit in 32 bits the pair is packed
     # into ONE primitive long through that aggregation (plans/pairkey.py;
     # round-3 event logs measured the two-column grouping key spilling
@@ -386,85 +322,10 @@ def set_sim_join_pairs(
     else:
         packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
 
-    if strategy == "count":
-        ex_l = l_rk.select("_l_key", "_l_size", F.explode("_l_ranked").alias("_tok"))
-        ex_r = r_rk.select("_r_key", "_r_size", F.explode("_r_ranked").alias("_tok"))
-        joined = salted_token_join(
-            ex_l, ex_r, hot, n_salts, "_l_key", pin_partitions=pin_n
-        ).where(
-            (F.col("_r_size") >= fm.size_lower_bound_col(F.col("_l_size"), measure, threshold))
-            & (F.col("_r_size") <= fm.size_upper_bound_col(F.col("_l_size"), measure, threshold))
-        )
-        if self_join_dedup:
-            joined = joined.where(F.col("_l_key") < F.col("_r_key"))
-        if packer is not None:
-            # sizes are functionally dependent on their key, so min() over
-            # the packed (l_size << 32 | r_size) long IS (min_ls, min_rs);
-            # the whole agg state is two primitive longs per group
-            szs = F.shiftleft(F.col("_l_size").cast("long"), 32).bitwiseOR(
-                F.col("_r_size").cast("long")
-            )
-            grouped = (
-                joined.groupBy(
-                    packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk")
-                )
-                .agg(F.count("*").alias("_ov"), F.min(szs).alias("_szs"))
-                .select(
-                    packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                    packer.unpack_r(F.col("_pk")).alias("_r_key"),
-                    "_ov",
-                    F.shiftright(F.col("_szs"), 32).cast("int").alias("_ls"),
-                    F.shiftright(F.shiftleft(F.col("_szs"), 32), 32)
-                    .cast("int")
-                    .alias("_rs"),
-                )
-            )
-        else:
-            grouped = joined.groupBy("_l_key", "_r_key").agg(
-                F.count("*").alias("_ov"),
-                F.min("_l_size").alias("_ls"),
-                F.min("_r_size").alias("_rs"),
-            )
-        ov = F.col("_ov").cast("double")
-        ls = F.col("_ls").cast("double")
-        rs = F.col("_rs").cast("double")
-        if measure == "jaccard":
-            score = ov / (ls + rs - ov)
-        elif measure == "cosine":
-            score = ov / F.sqrt(ls * rs)
-        elif measure == "dice":
-            score = F.lit(2.0) * ov / (ls + rs)
-        else:
-            raise AssertionError(measure)
-        pairs = (
-            grouped.withColumn("_sim_score", score)
-            .where(_COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold)))
-            .select("_l_key", "_r_key", "_sim_score")
-        )
-        if not verify:
-            pairs = pairs.select("_l_key", "_r_key")
-        pairs = _append_empty_and_missing(
-            pairs, measure, comp_op, threshold, allow_empty, allow_missing,
-            l_rk, r_rk, ltable, rtable, l_key_attr, r_key_attr,
-            l_join_attr, r_join_attr, self_join_dedup, with_score=verify,
-        )
-        return pairs
-
-    # Verify placement decision (only when verifying): on SHORT token sets
-    # the ranked arrays ride through the prefix explode and the
-    # array_intersect verify runs INLINE in the join stage, so the only
-    # post-join shuffle is the distinct over VERIFIED matches. On dense /
-    # dup-heavy corpora the raw joined stream is 3-10× the verified match
-    # count, and round-3 measured the candidate distinct + the two
-    # array-rejoin shuffles as the dominant (spill-bound, non-scaling) cost.
-    # For LONG token sets (arrays expensive to replicate prefix-length times
-    # through the exchange) the classic candidates-distinct → rejoin-arrays
-    # plan is kept. 64 tokens ≈ the break-even between array-replication
-    # bytes (corpus × prefix × setsize) and candidate-shuffle bytes.
-    inline_verify = False
-    if verify:
-        inline_verify = get_stats()["avg_size"] <= 64
-
+    # the ranked arrays ride through the prefix explode so the exact verify
+    # runs INLINE in the join stage: the only post-join shuffle is the
+    # distinct over VERIFIED matches, never the raw candidate stream (3-10×
+    # larger on dense / dup-heavy corpora)
     pl = (
         l_rk.withColumn(
             "_pfx", fm.prefix_length_col(F.col("_l_size"), measure, threshold)
@@ -472,7 +333,7 @@ def set_sim_join_pairs(
         .select(
             "_l_key",
             "_l_size",
-            *(["_l_ranked"] if inline_verify else []),
+            *(["_l_ranked"] if verify else []),
             F.posexplode(F.expr("slice(_l_ranked, 1, _pfx)")).alias("_l_pos", "_tok"),
         )
     )
@@ -483,13 +344,13 @@ def set_sim_join_pairs(
         .select(
             "_r_key",
             "_r_size",
-            *(["_r_ranked"] if inline_verify else []),
+            *(["_r_ranked"] if verify else []),
             F.posexplode(F.expr("slice(_r_ranked, 1, _pfx)")).alias("_r_pos", "_tok"),
         )
     )
 
     joined = salted_token_join(
-        pl, pr, hot, n_salts, "_l_key", pin_partitions=pin_n
+        pl, pr, hot, pin_partitions=None if tiny_join else n_shuffle
     ).where(
         (F.col("_r_size") >= fm.size_lower_bound_col(F.col("_l_size"), measure, threshold))
         & (F.col("_r_size") <= fm.size_upper_bound_col(F.col("_l_size"), measure, threshold))
@@ -515,81 +376,36 @@ def set_sim_join_pairs(
                 F.col("_l_size"), F.col("_r_size"), measure, threshold
             )
         )
-    def _distinct_pairs(df):
-        """distinct() over candidate pairs, through the packed key when
-        available (one primitive long instead of a two-column UnsafeRow)."""
-        if packer is None:
-            return df.select("_l_key", "_r_key").distinct()
-        return (
-            df.select(packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"))
-            .distinct()
-            .select(
-                packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                packer.unpack_r(F.col("_pk")).alias("_r_key"),
-            )
-        )
 
-    if not verify:
-        cand = _distinct_pairs(joined)
-        return _append_empty_and_missing(
-            cand, measure, comp_op, threshold, allow_empty, allow_missing,
-            l_rk, r_rk, ltable, rtable, l_key_attr, r_key_attr,
-            l_join_attr, r_join_attr, self_join_dedup, with_score=False,
-        )
-
-    # exact verify in pure JVM: the ranked arrays are duplicate-free ints, so
-    # array_intersect size IS the set overlap; the score arithmetic matches
-    # the count strategy's (identical IEEE-754 double ops → oracle parity).
-    # No Arrow transfer, no Python workers — whole-stage codegen end to end.
-    # (The previous mapInPandas verify spent ~95% of its wall time
-    # serializing the candidate arrays to Python: 6.1M pairs ≈ 130 s vs ~10 s
-    # JVM-side, measured at sf0.1.)
-    if inline_verify:
-        verify_in = joined
-    else:
-        cand = _distinct_pairs(joined)
-        verify_in = cand.join(l_rk.select("_l_key", "_l_ranked"), "_l_key").join(
-            r_rk.select("_r_key", "_r_ranked"), "_r_key"
-        ).select("_l_key", "_r_key", "_l_ranked", "_r_ranked")
-
-    ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
-    ls = F.size("_l_ranked").cast("double")
-    rs = F.size("_r_ranked").cast("double")
-    if measure == "jaccard":
-        score = ov / (ls + rs - ov)
-    elif measure == "cosine":
-        score = ov / F.sqrt(ls * rs)
-    elif measure == "dice":
-        score = F.lit(2.0) * ov / (ls + rs)
-    else:
-        raise AssertionError(measure)
-    pairs = (
-        verify_in.withColumn("_sim_score", score)
-        .where(_COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold)))
-        .select("_l_key", "_r_key", "_sim_score")
-    )
-    if inline_verify:
-        # duplicates (one per shared prefix token that survived the filters)
-        # carry identical scores; dedup the verified matches
-        if packer is not None:
-            pairs = (
-                pairs.select(
-                    packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"),
-                    "_sim_score",
-                )
-                .distinct()
-                .select(
-                    packer.unpack_l(F.col("_pk")).alias("_l_key"),
-                    packer.unpack_r(F.col("_pk")).alias("_r_key"),
-                    "_sim_score",
-                )
-            )
+    if verify:
+        # exact verify in pure JVM: the ranked arrays are duplicate-free
+        # ints, so array_intersect size IS the set overlap; the score
+        # arithmetic is the oracle's (identical IEEE-754 double ops → oracle
+        # parity). No Arrow transfer, no Python workers — whole-stage
+        # codegen end to end. (The previous mapInPandas verify spent ~95% of
+        # its wall time serializing the candidate arrays to Python: 6.1M
+        # pairs ≈ 130 s vs ~10 s JVM-side, measured at sf0.1.)
+        ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
+        ls = F.size("_l_ranked").cast("double")
+        rs = F.size("_r_ranked").cast("double")
+        if measure == "jaccard":
+            score = ov / (ls + rs - ov)
+        elif measure == "cosine":
+            score = ov / F.sqrt(ls * rs)
+        elif measure == "dice":
+            score = F.lit(2.0) * ov / (ls + rs)
         else:
-            pairs = pairs.distinct()
+            raise AssertionError(measure)
+        joined = joined.withColumn("_sim_score", score).where(
+            _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold))
+        )
+    # duplicates (one per shared prefix token that survived the filters)
+    # carry identical scores; dedup the (verified) pairs
+    pairs = distinct_pairs(joined, packer, *(["_sim_score"] if verify else []))
     return _append_empty_and_missing(
         pairs, measure, comp_op, threshold, allow_empty, allow_missing,
         l_rk, r_rk, ltable, rtable, l_key_attr, r_key_attr,
-        l_join_attr, r_join_attr, self_join_dedup, with_score=True,
+        l_join_attr, r_join_attr, self_join_dedup, with_score=verify,
     )
 
 
@@ -613,7 +429,6 @@ def set_sim_join(
     out_sim_score: bool = True,
     add_dense_id: bool | None = None,
     position_filter: bool = True,
-    strategy: str = "auto",
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     validate_output_attrs(l_out_attrs, r_out_attrs, ltable.columns, rtable.columns)
@@ -631,7 +446,6 @@ def set_sim_join(
         allow_empty,
         allow_missing,
         position_filter,
-        strategy=strategy,
         shuffle_partitions=shuffle_partitions,
     )
     return assemble_output(

@@ -42,8 +42,8 @@ def build_token_ordering(
     Frequency counts each token occurrence (bag occurrences count, matching
     utils/token_ordering.py:26-32); rank ascends with (count, token) —
     dense, 0-based, identical to a global zipWithIndex over the sorted
-    vocabulary. ``_freq`` rides along for the skew planner
-    (plans/skew.hot_token_ranks); rank consumers project it away for free.
+    vocabulary. ``_freq`` is the occurrence count the rank sorts on; rank
+    consumers project it away for free.
     """
     counted = None
     for df, tokens_col in token_sources:
@@ -53,10 +53,10 @@ def build_token_ordering(
     spark = freq_plan.sparkSession
     # ONE plan-time job probes the vocabulary size AND fetches it when
     # small: limit(threshold+1).collect() — under the limit the rows ARE
-    # the whole vocabulary, so size, Σf² (for the skew planner) and the
-    # rank all come from this single collection; the previous formulation
-    # ran three plan-time jobs (a persist materialization the small path
-    # never reused, a stats agg, a collect). The reduce side runs under
+    # the whole vocabulary, so size and rank both come from this single
+    # collection; the previous formulation ran three plan-time jobs (a
+    # persist materialization the small path never reused, a stats agg, a
+    # collect). The reduce side runs under
     # the utility shuffle sizing (util_shuffle_scope) rather than the
     # kernel-sized partition count. Wall-clock at sandbox scale is
     # parity-to-slightly-better (VM noise dominates); the structural win
@@ -86,22 +86,11 @@ def build_token_ordering(
                 "_freq": [r["_freq"] for r in rows],
             }
         )
-        out = spark.createDataFrame(pdf, schema="token string, rank long, _freq long")
-        out._ssj_vocab_stats = {
-            "n_vocab": len(rows),
-            "sum_f2": float(sum(float(r["_freq"]) ** 2 for r in rows)),
-        }
-        # (rank, freq) stays on the driver too: the skew planner reads it
-        # without launching any job (plans/skew.hot_token_ranks)
-        out._ssj_rank_freqs = [(i, r["_freq"]) for i, r in enumerate(rows)]
-        return out
-    # big-vocabulary path: persist — the vocabulary feeds the stats job and
-    # the two-phase rank below; without it each re-runs the corpus
-    # tokenize+explode+groupBy
+        return spark.createDataFrame(pdf, schema="token string, rank long, _freq long")
+    # big-vocabulary path: persist — the vocabulary feeds both the range
+    # partitioner's boundary sample and the two-phase rank below; without
+    # it each re-runs the corpus tokenize+explode+groupBy
     freq = persist_tracked(freq_plan)
-    fd = F.col("_freq").cast("double")
-    st = freq.agg(F.count("*").alias("c"), F.sum(fd * fd).alias("w")).first()
-    n_vocab, sum_f2 = st["c"], st["w"] or 0.0
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # phase 1: range partitioner puts partition i strictly before partition j
     # (i < j) in (_freq, token) order; row_number per partition is a parallel
@@ -133,11 +122,9 @@ def build_token_ordering(
         *[F.when(F.col("_pid") == pid, F.lit(off).cast("long")) for pid, off in offsets.items()],
         F.lit(0).cast("long"),
     ) if offsets else F.lit(0).cast("long")
-    out = local.select(
+    return local.select(
         "token", (off_expr + F.col("_rn")).alias("rank"), F.col("_freq").alias("_freq")
     )
-    out._ssj_vocab_stats = {"n_vocab": n_vocab, "sum_f2": sum_f2}
-    return out
 
 
 def add_ranked_tokens(

@@ -61,7 +61,6 @@ def topk_set_sim_join_pairs(
     threshold_floor: float,
     exclude_self: bool = True,
     position_filter: bool = True,
-    strategy: str = "auto",
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Core plan → DataFrame(_l_key, _r_key, _sim_score, _rank), _rank ∈ [1, k]."""
@@ -86,7 +85,6 @@ def topk_set_sim_join_pairs(
         allow_empty=False,
         allow_missing=False,
         position_filter=position_filter,
-        strategy=strategy,
         shuffle_partitions=shuffle_partitions,
     )
     if exclude_self:
@@ -184,7 +182,6 @@ def topk_sim_join(
     out_sim_score: bool = True,
     out_rank: bool = True,
     position_filter: bool = True,
-    strategy: str = "auto",
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Public surface, output-assembled like every other join in the package."""
@@ -202,7 +199,6 @@ def topk_sim_join(
         threshold_floor,
         exclude_self=exclude_self,
         position_filter=position_filter,
-        strategy=strategy,
         shuffle_partitions=shuffle_partitions,
     )
     if not out_rank:

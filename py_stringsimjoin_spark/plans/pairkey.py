@@ -2,8 +2,8 @@
 aggregations.
 
 The filter-verify joins end in a hash aggregation keyed by the candidate
-pair — ``groupBy(_l_key, _r_key)`` in the count strategy, ``distinct()``
-over verified matches in the prefix strategy. On dup-heavy corpora that
+pair — the ``distinct()`` over verified matches (or over candidates in
+blocking mode), ``distinct_pairs`` below. On dup-heavy corpora that
 aggregation holds hundreds of millions of grouping keys, and round-3 event
 logs measured it spilling 4-8× its exchange bytes: a two-column UnsafeRow
 grouping key pays ~24 bytes + null tracking per entry where a primitive
@@ -31,10 +31,9 @@ long-key bounds job happens to also reject NULLs (they'd collapse distinct
 pairs into one packed group); the static small-int path does NOT re-check —
 on contract-violating input its aggregation groups all NULL-keyed rows
 together where the unpacked groupBy would keep them per-(NULL, r) distinct.
-``spark.py_stringsimjoin.pairKeyPacking=off`` disables the whole mechanism;
-on contract-honoring input packing never changes results, only the
-aggregation's memory profile (oracle-checked both ways in
-tests/test_round4_features.py).
+On contract-honoring input packing never changes results, only the
+aggregation's memory profile (tests/test_round4_features.py compares long
+keys, which pack, against the same keys cast to string, which never do).
 """
 
 from __future__ import annotations
@@ -91,11 +90,8 @@ def resolve_pair_packer(
     ``l_key``/``r_key``. For statically-safe dtypes this is free; long keys
     cost ONE bounded aggregation job over the key columns only (both sides
     in a single union job; skipped for self-joins). Returns None — pack
-    nothing — on any doubt: non-integral dtype, NULL keys, out-of-range
-    values, or the conf kill-switch."""
-    spark = l_keyed.sparkSession
-    if spark.conf.get("spark.py_stringsimjoin.pairKeyPacking", "auto") == "off":
-        return None
+    nothing — on any doubt: non-integral dtype, NULL keys or out-of-range
+    values."""
     l_type = l_keyed.schema[l_key].dataType
     r_type = r_keyed.schema[r_key].dataType
     l_need = _needs_bounds(l_type)
@@ -124,3 +120,22 @@ def resolve_pair_packer(
         ):
             return None
     return PairPacker(l_type, r_type)
+
+
+def distinct_pairs(
+    df: DataFrame, packer: PairPacker | None, *payload: str
+) -> DataFrame:
+    """``df.select(_l_key, _r_key, *payload).distinct()``, grouped through one
+    packed long when ``packer`` is given. ``payload`` columns must be a
+    function of the pair (e.g. its verified score)."""
+    if packer is None:
+        return df.select("_l_key", "_r_key", *payload).distinct()
+    return (
+        df.select(packer.pack(F.col("_l_key"), F.col("_r_key")).alias("_pk"), *payload)
+        .distinct()
+        .select(
+            packer.unpack_l(F.col("_pk")).alias("_l_key"),
+            packer.unpack_r(F.col("_pk")).alias("_r_key"),
+            *payload,
+        )
+    )

@@ -1,18 +1,21 @@
 """Hot-token skew handling for exploding equi-joins.
 
-The prefix/count token joins at the heart of the engine explode rows by
-token and hash-join on token rank. On web text the token frequencies are
-Zipfian: the hottest tokens produce join outputs quadratic in their
-frequency, all inside ONE hash partition. AQE's skew-join split cannot help
-— it splits partitions by *input* bytes, and an exploding join's input is
-tiny while its output is enormous (measured here: a 16-token vocabulary at
-sf0.1 serializes the whole join into ~2 tasks, one of which runs for
-minutes).
+The prefix-filter and overlap token joins at the heart of the engine
+explode rows by token and hash-join on token. On web text the token
+frequencies are Zipfian: the hottest tokens produce join outputs quadratic
+in their frequency, all inside ONE hash partition. AQE's skew-join split
+cannot help — it splits partitions by *input* bytes, and an exploding
+join's input is tiny while its output is enormous (measured here: a
+16-token vocabulary at sf0.1 serializes the whole join into ~2 tasks, one
+of which runs for minutes).
 
-The engine fixes this with *per-token proportional salting*. The global
-token ordering already counts every token's frequency, so each token's
-share of the total join work (w_t = f_t², Σw = Σf²) is known, and each hot
-token gets exactly the number of salt buckets its output share needs:
+The engine fixes this with *per-token proportional salting*. One plan-time
+job counts every token's frequency in the stream the join actually
+explodes (``exploded_hot_token_ranks``: the prefix stream of the
+prefix-filter kernels; ``sampled_hot_tokens``: a row sample for the overlap
+joins), so each token's share of the total join work (w_t = f_t²,
+Σw = Σf²) is known, and each hot token gets exactly the number of salt
+buckets its output share needs:
 
     S_t = ceil(α · P · w_t / Σw),   clamped to [1, α·P]
 
@@ -57,6 +60,13 @@ from pyspark.sql import functions as F
 # only. α=8 was already past the replication break-even (x2: 22.2 s).
 SALT_ALPHA = 4
 
+# Tiny-join gate of the prefix-filter kernels (set_sim_join_pairs,
+# edit_distance_join): a join whose input is known to hold fewer rows than
+# this skips the hot-token probe job and the exchange pinning — below it
+# even the worst-case single-bucket join is sub-second, while the probe job
+# and two pinned exchanges would dominate the query.
+SALT_PROBE_MIN_ROWS = 4096
+
 
 def resolve_salt_alpha(spark) -> int:
     v = spark.conf.get("spark.py_stringsimjoin.saltAlpha", None)
@@ -73,53 +83,6 @@ def resolve_salt_parallelism(df: DataFrame, n_shuffle: int) -> int:
     local parallelism)."""
     v = df.sparkSession.conf.get("spark.py_stringsimjoin.saltParallelism", None)
     return int(v) if v else n_shuffle
-
-
-def hot_token_ranks(
-    ordering: DataFrame, parallelism: int, alpha: int | None = None
-) -> dict[int, int]:
-    """{rank: S_t} for every token that needs ≥2 salt buckets.
-
-    S_t = ceil(α·P·f_t²/Σf²) clamped to α·P. Only tokens with
-    f_t² > Σf²/(α·P) qualify, so at most α·P entries come back — the
-    collect is bounded and tiny. Requires the ordering to carry ``_freq``
-    (build_token_ordering provides it and stashes Σf² on the DataFrame, so
-    this usually costs one bounded collect and no aggregation pass)."""
-    if "_freq" not in ordering.columns or parallelism <= 1:
-        return {}
-    if alpha is None:
-        alpha = resolve_salt_alpha(ordering.sparkSession)
-    f = F.col("_freq").cast("double")
-    stats = getattr(ordering, "_ssj_vocab_stats", None)
-    if stats is not None:
-        w = stats["sum_f2"] or 0.0
-    else:
-        w = ordering.agg(F.sum(f * f).alias("w")).first()["w"] or 0.0
-    if w <= 0:
-        return {}
-    budget = w / (alpha * parallelism)  # per-bucket work share
-    local = getattr(ordering, "_ssj_rank_freqs", None)
-    if local is not None:
-        # small-vocab orderings carry (rank, freq) on the driver — the hot
-        # set is computed with NO Spark job at all
-        rows = [
-            {"rank": rk, "_freq": fq}
-            for rk, fq in local
-            if float(fq) * float(fq) > budget
-        ]
-    else:
-        rows = (
-            ordering.where(f * f > F.lit(budget))
-            .select("rank", "_freq")
-            .collect()
-        )
-    cap = alpha * parallelism
-    out = {}
-    for r in rows:
-        s = math.ceil((r["_freq"] ** 2) / budget)
-        s = max(2, min(int(s), cap))
-        out[int(r["rank"])] = s
-    return out
 
 
 def _hot_from_tok_stream(spark, tok_stream: DataFrame, parallelism: int,
@@ -186,21 +149,13 @@ def exploded_hot_token_ranks(
     ``ex_probe`` should be the exploded token column only (no arrays, no
     payload) so the probe costs one map-side-combined count per distinct
     token — strictly cheaper than the ordering build that already scanned
-    every token once. ``spark.py_stringsimjoin.saltPrefixSampleFraction``
-    (default 1.0 = exact) row-samples the probe first: at 10^12-doc scale
-    set ~0.01 — both sides of the hot ratio scale by ~p², so the sampled
-    plan converges to the exact one (salting is output-invariant either
-    way: a miss costs balance, never correctness)."""
+    every token once. The counts are exact."""
     spark = ex_probe.sparkSession
     if alpha is None:
         alpha = resolve_salt_alpha(spark)
-    p = float(
-        spark.conf.get("spark.py_stringsimjoin.saltPrefixSampleFraction", "1.0")
+    return _hot_from_tok_stream(
+        spark, ex_probe.select(tok_col), parallelism, alpha, tok_col
     )
-    probe = ex_probe.select(tok_col)
-    if p < 1.0:
-        probe = probe.sample(fraction=p, seed=42)
-    return _hot_from_tok_stream(spark, probe, parallelism, alpha, tok_col)
 
 
 def sampled_hot_tokens(
@@ -242,16 +197,12 @@ def salted_token_join(
     ex_l: DataFrame,
     ex_r: DataFrame,
     hot: dict[int, int],
-    n_salts_unused: int | None = None,
     l_salt_key: str = "_l_key",
     tok_col: str = "_tok",
     pin_partitions: int | None = None,
 ) -> DataFrame:
     """Equi-join two exploded token tables on ``tok_col`` with per-token
-    hot salting. With an empty plan this is a plain join (zero overhead).
-
-    ``n_salts_unused`` is retained for call-site compatibility; bucket
-    counts come from the per-token plan."""
+    hot salting. With an empty plan this is a plain join (zero overhead)."""
     if not hot:
         if pin_partitions:
             # still pin the exchange so AQE byte-coalescing cannot

@@ -1,32 +1,27 @@
-"""Shared pre-plan statistics for the engine's cost-based decisions.
+"""Shared pre-plan statistics for the engine's value-dedup decision.
 
-The joins make three cost-based choices Catalyst cannot (they are domain
-logic, not relational rewrites): *value dedup* (run the join over distinct
-join-attr VALUES when the corpus is duplicate-heavy), *prefix vs count*
-strategy, and *inline vs rejoin* verify placement. All need tiny table
-statistics.
+The joins make one cost-based choice Catalyst cannot (it is domain logic,
+not a relational rewrite): *value dedup* — run the join over distinct
+join-attr VALUES when the corpus is duplicate-heavy. The set-sim kernels'
+tiny-join gate reads the same row count when it is already paid for.
 
-Round 3 computed them with full-corpus driver-blocking jobs per join call
-(count + approx_count_distinct over every join attr, then an avg-size
-aggregation that materialized the whole ranked-token table at plan time) —
-at 100 TB that is two-to-three extra corpus reads per query. Round 4
-replaces them with ONE bounded-sample job: each side contributes at most
+Round 3 computed these with full-corpus driver-blocking jobs per join call
+(count + approx_count_distinct over every join attr). Round 4 replaced them
+with ONE bounded-sample job: each side contributes at most
 ``spark.py_stringsimjoin.statsSampleRows`` rows (default 100k) via
 ``limit()``, which Spark satisfies by reading a handful of input partitions
-— the job's cost is O(sample), independent of corpus size. The decisions
-these estimates feed are pure physical-plan choices; every strategy produces
+— the job's cost is O(sample), independent of corpus size. The decision
+these estimates feed is a pure physical-plan choice; both plans produce
 identical output, so a sampling miss costs performance, never correctness.
 Set the conf to ``0`` to restore exact full-corpus statistics, or pass
-``value_dedup=`` / ``strategy=`` explicitly to skip the job entirely.
+``value_dedup=`` explicitly to skip the job entirely.
 
 NOTE ON EAGERNESS: the stats job still runs at PLAN TIME (the physical plan
-shape depends on the answer, so it cannot be deferred) — but it is now a
+shape depends on the answer, so it cannot be deferred) — but it is a
 bounded read, not a corpus scan.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -81,20 +76,14 @@ def _sample_rows_conf(df: DataFrame) -> int:
 
 
 def sample_plan_stats(
-    sides: list[tuple[DataFrame, str]],
-    tokenizer=None,
-    prefix_col_fn: Callable[[Column], Column] | None = None,
-    sample_rows: int | None = None,
+    sides: list[tuple[DataFrame, str]], sample_rows: int | None = None
 ) -> dict:
-    """ONE bounded Spark job → the estimates every plan-time decision needs.
-
-    Returns ``{"n", "nd", "avg_size", "avg_pfx"}`` (the last two only when a
-    tokenizer is given): per-side row count, per-side approx-distinct of the
-    join attr (summed across sides, matching the round-2 per-side
-    semantics), and the row-weighted average token-set size / prefix length.
-    Each side is capped at ``sample_rows`` rows (``limit`` — a bounded read
-    of the first input partitions, not a corpus scan); ``sample_rows<=0``
-    means exact full-table statistics.
+    """ONE bounded Spark job → ``{"n", "nd"}``: per-side row count and
+    per-side approx-distinct of the join attr, each summed across sides
+    (the round-2 per-side semantics). Each side is capped at
+    ``sample_rows`` rows (``limit`` — a bounded read of the first input
+    partitions, not a corpus scan); ``sample_rows<=0`` means exact
+    full-table statistics.
     """
     if sample_rows is None:
         sample_rows = _sample_rows_conf(sides[0][0])
@@ -106,42 +95,11 @@ def sample_plan_stats(
         if sample_rows > 0:
             p = p.limit(sample_rows)
         u = p if u is None else u.unionByName(p)
-    aggs = [F.count("*").alias("n"), F.approx_count_distinct("_v").alias("nd")]
-    if tokenizer is not None:
-        # the global limit above collapses to ONE partition, so the sample's
-        # tokenize (the job's only real work) would run single-task; widen it
-        # back to the utility parallelism first (plans/layout.py)
-        from .layout import widen_small_scan
-
-        u = widen_small_scan(u)
-        u = u.withColumn("_sz", F.size(tokenizer.spark_col(F.col("_v"))))
-        aggs.append(F.avg("_sz").alias("s"))
-        if prefix_col_fn is not None:
-            aggs.append(F.avg(prefix_col_fn(F.col("_sz"))).alias("p"))
     with util_shuffle_scope(u.sparkSession):
-        rows = u.groupBy("_side").agg(*aggs).collect()
-    n = sum(r["n"] for r in rows)
-    out = {"n": n, "nd": sum(r["nd"] for r in rows)}
-    if tokenizer is not None:
-        tot = n or 1
-        out["avg_size"] = sum((r["s"] or 0.0) * r["n"] for r in rows) / tot
-        if prefix_col_fn is not None:
-            out["avg_pfx"] = sum((r["p"] or 0.0) * r["n"] for r in rows) / tot
-    return out
-
-
-def dup_value_stats(
-    sides: list[tuple[DataFrame, str]], sample_rows: int | None = None
-) -> tuple[int, int]:
-    """(rows, approx_distinct) over the non-null join attrs — sample-bounded."""
-    st = sample_plan_stats(sides, sample_rows=sample_rows)
-    return st["n"], st["nd"]
-
-
-def value_dedup_auto(sides: list[tuple[DataFrame, str]], ratio: float = 0.6) -> bool:
-    """True when distinct/total < ratio (dup-heavy ⇒ join distinct values)."""
-    n, nd = dup_value_stats(sides)
-    return n > 0 and nd / n < ratio
+        rows = u.groupBy("_side").agg(
+            F.count("*").alias("n"), F.approx_count_distinct("_v").alias("nd")
+        ).collect()
+    return {"n": sum(r["n"] for r in rows), "nd": sum(r["nd"] for r in rows)}
 
 
 def value_hash_col(col) -> Column:

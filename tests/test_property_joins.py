@@ -1,6 +1,12 @@
 """Property-based oracle tests: random corpora × random thresholds must match
-the brute-force oracle for both physical strategies (hypothesis drives the
-data; one Spark job per example keeps runtime bounded)."""
+the brute-force oracle on every branch of the kernels' plan-time choices
+(hypothesis drives the data; one Spark job per example keeps runtime
+bounded).
+
+``_join_rows_hint`` forces the set-sim kernel's tiny-join gate on the
+row-level join: 1 takes the gated plan (no hot-token probe, no exchange
+pinning), 10**9 the probed, salted and pinned plan. (A value-dedup join
+passes its own distinct-value count to the inner join instead.)"""
 
 import random
 
@@ -33,25 +39,25 @@ def _mk_rows(seed: int, n: int):
     seed=st.integers(0, 10_000),
     threshold=st.sampled_from([0.25, 0.4, 0.6, 0.85, 1.0]),
     measure=st.sampled_from(["jaccard", "cosine", "dice"]),
-    strategy=st.sampled_from(["prefix", "count"]),
+    rows_hint=st.sampled_from([1, 10**9]),
     value_dedup=st.sampled_from([False, "auto"]),
 )
-def test_random_corpus_matches_oracle(spark, seed, threshold, measure, strategy, value_dedup):
+def test_random_corpus_matches_oracle(spark, seed, threshold, measure, rows_hint, value_dedup):
     rows_a = _mk_rows(seed, 12)
     rows_b = _mk_rows(seed + 1, 12)
     A = spark.createDataFrame(rows_a, "ID string, name string")
     B = spark.createDataFrame(rows_b, "ID string, name string")
     out = set_sim_join_pairs(
         measure, A, B, "ID", "ID", "name", "name",
-        WhitespaceTokenizer(), threshold, strategy=strategy,
-        value_dedup=value_dedup,
+        WhitespaceTokenizer(), threshold, value_dedup=value_dedup,
+        _join_rows_hint=rows_hint,
     )
     got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in out.collect()}
     exp = brute_force_set_sim(
         rows_a, rows_b, 0, 0, 1, 1, WhitespaceTokenizer(), measure, threshold
     )
     assert set(got) == set(exp), (
-        f"{measure} t={threshold} {strategy}: "
+        f"{measure} t={threshold} hint={rows_hint} dedup={value_dedup}: "
         f"extra={set(got) - set(exp)} missing={set(exp) - set(got)}"
     )
     for k, v in exp.items():
@@ -134,13 +140,14 @@ def _brute_missing_pairs(rows_a, rows_b, l_key_i, r_key_i, l_join_i, r_join_i):
     measure=st.sampled_from(["jaccard", "cosine", "dice"]),
     comp_op=st.sampled_from([">=", ">", "="]),
     allow_missing=st.booleans(),
-    strategy=st.sampled_from(["prefix", "count"]),
+    rows_hint=st.sampled_from([1, 10**9]),
 )
 def test_comp_op_allow_missing_grid(
-    spark, seed, threshold, measure, comp_op, allow_missing, strategy
+    spark, seed, threshold, measure, comp_op, allow_missing, rows_hint
 ):
     """The reference parameter grid (tests/test_join.py:198-216): comp_op
-    variants × allow_missing against brute force, both physical strategies."""
+    variants × allow_missing against brute force, on both sides of the
+    tiny-join gate."""
     rows_a = _mk_rows(seed, 12)
     rows_b = _mk_rows(seed + 1, 12)
     A = spark.createDataFrame(rows_a, "ID string, name string")
@@ -148,7 +155,8 @@ def test_comp_op_allow_missing_grid(
     out = set_sim_join_pairs(
         measure, A, B, "ID", "ID", "name", "name",
         WhitespaceTokenizer(), threshold, comp_op=comp_op,
-        allow_missing=allow_missing, strategy=strategy, value_dedup=False,
+        allow_missing=allow_missing, value_dedup=False,
+        _join_rows_hint=rows_hint,
     )
     got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in out.collect()}
     exp = brute_force_set_sim(
@@ -159,7 +167,7 @@ def test_comp_op_allow_missing_grid(
         exp.update(_brute_missing_pairs(rows_a, rows_b, 0, 0, 1, 1))
     assert set(got) == set(exp), (
         f"{measure} t={threshold} {comp_op} missing={allow_missing} "
-        f"{strategy}: extra={set(got) - set(exp)} missing={set(exp) - set(got)}"
+        f"hint={rows_hint}: extra={set(got) - set(exp)} missing={set(exp) - set(got)}"
     )
     for k, v in exp.items():
         if v is None:

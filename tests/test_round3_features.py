@@ -64,7 +64,7 @@ def test_shuffle_partitions_knob_pins_exchange(spark, person_tables):
     A, _ = person_tables
     pairs = set_sim_join_pairs(
         "jaccard", A, A, "ID", "ID", "name", "name", WhitespaceTokenizer(),
-        0.1, value_dedup=False, strategy="prefix", shuffle_partitions=13,
+        0.1, value_dedup=False, shuffle_partitions=13,
     )
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning" in plan
@@ -74,7 +74,7 @@ def test_shuffle_partitions_knob_pins_exchange(spark, person_tables):
     # and the result is still correct (same rows as the default plan)
     base = set_sim_join_pairs(
         "jaccard", A, A, "ID", "ID", "name", "name", WhitespaceTokenizer(),
-        0.1, value_dedup=False, strategy="prefix",
+        0.1, value_dedup=False,
     )
     got = {tuple(r) for r in pairs.collect()}
     want = {tuple(r) for r in base.collect()}
@@ -195,11 +195,10 @@ def test_connected_components_with_reliable_checkpoint(spark, tmp_path):
             spark.sparkContext.setCheckpointDir(old)
 
 
-def test_long_token_sets_use_rejoin_verify_and_match_bruteforce(spark):
-    """Token sets averaging >64 tokens take the candidates-distinct →
-    rejoin-arrays verify plan (carrying 80-token arrays through the prefix
-    explode would replicate them prefix-length times); short sets verify
-    inline. Both must produce identical, brute-force-correct output."""
+def test_80_token_sets_verify_inline_and_match_bruteforce(spark):
+    """80-token sets carry their ranked arrays through the prefix explode
+    and verify inline in the join stage, like short sets; the output must
+    match brute force."""
     import random
 
     rng = random.Random(7)
@@ -216,7 +215,7 @@ def test_long_token_sets_use_rejoin_verify_and_match_bruteforce(spark):
     out = set_sim_join_pairs(
         "jaccard", df, df, "id", "id", "txt", "txt",
         WhitespaceTokenizer(), 0.3, allow_empty=False, self_join_dedup=True,
-        value_dedup=False, strategy="prefix",
+        value_dedup=False,
     )
     got = {(r["_l_key"], r["_r_key"], round(r["_sim_score"], 12)) for r in out.collect()}
     sets = {i: set(t.split()) for i, t in rows}

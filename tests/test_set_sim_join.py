@@ -39,12 +39,11 @@ def _check(spark, A, B, measure, tokenizer, threshold, comp_op=">=", allow_empty
         assert got[k] == pytest.approx(v, abs=1e-9), (k, got[k], v)
 
 
-@pytest.mark.parametrize("strategy", ["prefix", "count"])
 @pytest.mark.parametrize("measure", ["jaccard", "cosine", "dice"])
 @pytest.mark.parametrize("threshold", [0.3, 0.7])
-def test_set_sim_ws(spark, person_tables, measure, threshold, strategy):
+def test_set_sim_ws(spark, person_tables, measure, threshold):
     A, B = person_tables
-    _check(spark, A, B, measure, WhitespaceTokenizer(), threshold, strategy=strategy)
+    _check(spark, A, B, measure, WhitespaceTokenizer(), threshold)
 
 
 @pytest.mark.parametrize("measure", ["jaccard", "cosine"])

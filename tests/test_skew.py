@@ -4,7 +4,10 @@ from pyspark.sql import functions as F
 from py_stringsimjoin_spark.functions.tokenizers import WhitespaceTokenizer
 from py_stringsimjoin_spark.operators.set_sim_join import set_sim_join_pairs
 from py_stringsimjoin_spark.operators.token_ordering import build_token_ordering
-from py_stringsimjoin_spark.plans.skew import hot_token_ranks, salted_token_join
+from py_stringsimjoin_spark.plans.skew import (
+    exploded_hot_token_ranks,
+    salted_token_join,
+)
 
 
 @pytest.fixture(scope="module")
@@ -19,26 +22,6 @@ def skewed(spark):
     return spark.createDataFrame(rows, ["id", "txt"])
 
 
-def test_hot_token_ranks_bounded_and_detects_head(spark, skewed):
-    tok = WhitespaceTokenizer(return_set=True)
-    df = skewed.select(tok.spark_col(F.col("txt")).alias("_tokens"))
-    ordering = build_token_ordering([(df, "_tokens")])
-    hot = hot_token_ranks(ordering, parallelism=4)
-    assert 1 <= len(hot) <= 8  # at most α·P tokens can need ≥2 buckets
-    # the universal token is the most frequent → the highest rank, and its
-    # ~50% work share earns it the most salt buckets
-    n_vocab = ordering.count()
-    assert (n_vocab - 1) in hot
-    assert hot[n_vocab - 1] == max(hot.values()) and hot[n_vocab - 1] >= 2
-
-
-def test_hot_token_ranks_needs_freq(spark, skewed):
-    tok = WhitespaceTokenizer(return_set=True)
-    df = skewed.select(tok.spark_col(F.col("txt")).alias("_tokens"))
-    ordering = build_token_ordering([(df, "_tokens")]).drop("_freq")
-    assert hot_token_ranks(ordering, 4) == {}
-
-
 def test_salted_join_identical_output(spark, skewed):
     """Salted and unsalted token joins must produce the same joined row
     multiset (projected to keys)."""
@@ -50,7 +33,8 @@ def test_salted_join_identical_output(spark, skewed):
     rk = add_ranked_tokens(base, ["_k"], "_tokens", ordering, "_r", "_n")
     ex_l = rk.select(F.col("_k").alias("_l_key"), F.explode("_r").alias("_tok"))
     ex_r = rk.select(F.col("_k").alias("_r_key"), F.explode("_r").alias("_tok"))
-    hot = hot_token_ranks(ordering, 4)
+    # both sides explode the same token stream; measure it once
+    hot = exploded_hot_token_ranks(ex_l, 4)
     assert hot
     plain = ex_l.join(ex_r, "_tok").groupBy("_l_key", "_r_key").count()
     salted = (
@@ -70,7 +54,6 @@ def test_set_sim_join_salted_vs_plain(spark, skewed):
     out = set_sim_join_pairs(
         "jaccard", skewed, skewed, "id", "id", "txt", "txt", tok, 0.5,
         allow_empty=False, self_join_dedup=True, value_dedup=False,
-        strategy="count",
     )
     got = {(r["_l_key"], r["_r_key"], round(r["_sim_score"], 12)) for r in out.collect()}
     rows = {r["id"]: set(r["txt"].split()) for r in skewed.collect()}
