@@ -225,13 +225,14 @@ class LinkagePipeline:
         st_block = Stage(self.workdir, "02_blocking")
         st_ext = Stage(self.workdir, "01_extract")
         st = Stage(self.workdir, "03_scoring")
-        upstream = st_block.manifest()["fingerprint"]
-        fp = _fingerprint({**self.params, "stage": "scoring", "up": upstream})
+        m_block = st_block.manifest()
+        fp = _fingerprint({**self.params, "stage": "scoring", "up": m_block["fingerprint"]})
         if st.done(fp):
             return st.manifest()
         docs = st_ext.read(self.spark)
         cand = st_block.read(self.spark)
-        n_cand = cand.count()
+        # the blocking manifest already counted the candidates it wrote
+        n_cand = m_block["n_rows"]
         t0 = time.time()
         from ..operators.matcher import verify_pairs
 

@@ -5,6 +5,7 @@ product of non-NULL rows, exact sim per pair, threshold, compare pair sets."""
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
 
 def sim_on_sets(measure: str, l_toks: list[str], r_toks: list[str]) -> float:
@@ -94,4 +95,29 @@ def brute_force_edit_distance(
             d = levenshtein(la[l_join_i], rb[r_join_i])
             if apply_comp(comp_op, d, threshold):
                 out[(la[l_key_i], rb[r_key_i])] = float(d)
+    return out
+
+
+def bfs_components(edges) -> dict:
+    """node -> min node id of its component, for (a, b) edges; null
+    endpoints and self-loops add no node."""
+    adj = defaultdict(set)
+    for a, b in edges:
+        if a is None or b is None or a == b:
+            continue
+        adj[a].add(b)
+        adj[b].add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()]:
+                if nb not in seen:
+                    seen.add(nb)
+                    todo.append(nb)
+        # Python compares str by code point = Spark's UTF-8 byte order
+        root = min(seen)
+        out.update({n: root for n in seen})
     return out

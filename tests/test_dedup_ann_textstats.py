@@ -101,7 +101,7 @@ def test_connected_components(spark):
 
 
 def test_connected_components_chain(spark):
-    # a long chain exercises multiple large/small-star rounds
+    # a 30-edge chain: the local labelling needs several pointer jumps
     edges = spark.createDataFrame([(i, i + 1) for i in range(30)], ["src", "dst"])
     comp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert set(comp.values()) == {0}

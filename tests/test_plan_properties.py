@@ -175,8 +175,19 @@ def test_update_components_remap_is_broadcast(spark):
     assign = spark.range(100).select(
         F.col("id").alias("node"), (F.col("id") % 10).alias("component")
     )
+    # each delta edge joins two nodes of one component: the contracted
+    # graph is empty, and so is the locally labelled remap, which Spark
+    # prunes with its join
     delta = spark.range(5).select(
         F.col("id").alias("src"), (F.col("id") + 50).alias("dst")
+    )
+    plan = _plan(update_components(assign, delta))
+    for node in _PY_NODES:
+        assert node not in plan, f"{node} in update_components plan"
+    assert "SortMergeJoin" not in plan
+    # each delta edge joins components i and i+1: a non-empty remap
+    delta = spark.range(5).select(
+        F.col("id").alias("src"), (F.col("id") + 51).alias("dst")
     )
     out = update_components(assign, delta)
     plan = _plan(out)
@@ -186,6 +197,8 @@ def test_update_components_remap_is_broadcast(spark):
     # (the remap is delta-bounded; a sort-merge join here would shuffle the
     # full assignment table)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    got = {r.node: r.component for r in out.collect()}
+    assert got == {n: 0 if n % 10 <= 5 else n % 10 for n in range(100)}
 
 
 def test_textclean_plans_are_python_free(spark):
