@@ -23,11 +23,16 @@ The token-equi-join itself shuffles by TOKEN, so bucketing-by-key cannot
 remove that exchange — the preparation reuse (no tokenize, no ordering
 build, no rank groupBy) is the main saving, measured in BENCH.md.
 
-Scope: SELF-joins only. Two independently prepared corpora cannot be joined
-against each other — each has its own token→rank mapping, and re-ranking
-one side against the other's ordering would silently drop unseen tokens.
-Corpora are row-level by construction; for dup-heavy corpora prepare over
-``df.select(key, attr).distinct()`` yourself and expand afterwards.
+Scope: ``join_pairs`` is a SELF-join. Two independently prepared corpora
+cannot be joined against each other — each has its own token→rank mapping.
+New rows join a prepared corpus through ``join_delta_pairs`` instead: they
+are ranked against the stored ordering, their unseen tokens get fixed new
+ranks below every stored rank, and one delta kernel joins the delta
+prefixes against the corpus prefixes (and, for
+``LinkagePipeline.increment``, against the delta's own, so delta-internal
+pairs come out of the same join). Corpora are row-level by construction;
+for dup-heavy corpora prepare over ``df.select(key, attr).distinct()``
+yourself and expand afterwards.
 
 The reference has no analogous surface (every join call re-tokenizes and
 rebuilds its ordering dict, join/set_sim_join.py:16-139); this is the
@@ -37,15 +42,26 @@ co-located joins, applied Spark-first.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import cached_property
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenizers import Tokenizer
 from ..plans.cache import persist_tracked
+from ..plans.pairkey import distinct_pairs
 from ..plans.stats import sample_plan_stats
-from ..plans import filter_math as fm
-from .set_sim_join import as_set_tokenizer, set_sim_join_pairs
+from .set_sim_join import (
+    _filter_and_verify,
+    _prefix_explode,
+    as_set_tokenizer,
+    set_sim_join_pairs,
+)
 from .token_ordering import add_ranked_tokens, build_token_ordering
+
+# rank layout of tokens first seen in an increment (``_rank_delta``)
+_BAND_BITS = 48
+_BUCKET_BITS = 10
 
 
 class PreparedSetSimCorpus:
@@ -101,9 +117,7 @@ class PreparedSetSimCorpus:
             ranked = persist_tracked(ranked)
         self.ordering = ordering
         self.ranked = ranked
-        # the sampled row count every join over this corpus hands to the
-        # kernel's tiny-join gate
-        self.stats = sample_plan_stats([(proj, "_l_str")])
+        self._epoch = 0
 
     @classmethod
     def load(
@@ -123,26 +137,55 @@ class PreparedSetSimCorpus:
         one used at prepare time — neither is re-derivable from the stored
         tables, so both are caller-supplied and unvalidated. Pass
         ``table_name`` to read a ``buckets=`` materialization through the
-        metastore (bucketed scan) instead of plain parquet. The only job
-        this runs is the bounded-sample stats probe; the tokenize / ordering
-        / rank work is skipped entirely.
+        metastore (bucketed scan) instead of plain parquet. It runs no job:
+        the tokenize / ordering / rank work is skipped entirely, and the
+        sampled stats wait for the first ``join_pairs``.
         """
+        spark = table.sparkSession
+        ranked = (
+            spark.table(table_name)
+            if table_name is not None
+            else spark.read.parquet(f"{path}/ranked")
+        )
+        return cls._of(
+            table, key_attr, join_attr, tokenizer,
+            spark.read.parquet(f"{path}/ordering"), ranked,
+        )
+
+    @classmethod
+    def _of(
+        cls,
+        table: DataFrame,
+        key_attr: str,
+        join_attr: str,
+        tokenizer: Tokenizer,
+        ordering: DataFrame,
+        ranked: DataFrame,
+        epoch: int = 0,
+    ) -> "PreparedSetSimCorpus":
+        """A corpus over already-built tables: ``ordering`` (token, rank)
+        and ``ranked`` (_l_key, _l_ranked, _l_size), into whose ranks
+        ``epoch`` increments have been folded (``_new_ranks``)."""
         self = cls.__new__(cls)
         self.table = table
         self.key_attr = key_attr
         self.join_attr = join_attr
         self.tokenizer = as_set_tokenizer(tokenizer)
-        spark = table.sparkSession
-        self.ordering = spark.read.parquet(f"{path}/ordering")
-        if table_name is not None:
-            self.ranked = spark.table(table_name)
-        else:
-            self.ranked = spark.read.parquet(f"{path}/ranked")
-        proj = table.select(
-            F.col(key_attr).alias("_l_key"), F.col(join_attr).alias("_l_str")
-        )
-        self.stats = sample_plan_stats([(proj, "_l_str")])
+        self.ordering = ordering
+        self.ranked = ranked
+        self._epoch = epoch
         return self
+
+    @cached_property
+    def stats(self) -> dict:
+        """The sampled row count every self-join over this corpus hands to
+        the kernel's tiny-join gate; one bounded-sample job, paid by the
+        first ``join_pairs`` (the delta kernel never reads it)."""
+        proj = self.table.select(
+            F.col(self.key_attr).alias("_l_key"),
+            F.col(self.join_attr).alias("_l_str"),
+        )
+        return sample_plan_stats([(proj, "_l_str")])
 
     def resolve_packer(self):
         """Pair-key packer for self-joins over this corpus, resolved ONCE.
@@ -210,137 +253,141 @@ class PreparedSetSimCorpus:
         """Join NEW rows against this prepared corpus without re-preparing it.
 
         The incremental-crawl pattern: the corpus (N rows) is prepared once;
-        each increment (n ≪ N rows) joins against it in one pass — no corpus
-        re-tokenize, no ordering rebuild, no corpus-side shuffle beyond the
-        probe join against the persisted ranked table. Returns
-        ``(_l_key, _r_key, _sim_score)`` with ``_l_key`` from the delta and
-        ``_r_key`` from the corpus (delta-internal pairs are NOT included —
-        fold the increment into a new prepared corpus periodically).
-
-        Correctness with unseen tokens: delta tokens absent from the corpus
-        vocabulary cannot match any corpus row, but they DO count in the
-        delta row's set size — so sizes come from the FULL token set while
-        the overlap is computed on the known-rank arrays (exact: the
-        intersection can only contain known tokens). The candidate probe is
-        the full prefix-filter + PPJoin position bound, both sides: extend
-        the corpus's total order by placing unseen tokens AFTER every known
-        rank — corpus arrays are unchanged, and the delta row's sorted-set
-        prefix of length p(|full set|) is then exactly
-        ``slice(known_ranks, 1, p)`` as far as any corpus set can see (the
-        unseen tail of the prefix intersects nothing). Any true pair's
-        first common token is a known rank inside both prefixes, so no
-        pair is missed; the position bound at that token uses the KNOWN
-        remaining count on the delta side (the overlap is a subset of the
-        known ranks), which is tighter than |full| − pos − 1 and still an
-        upper bound.
+        each increment (n ≪ N rows) is tokenized and ranked against the
+        stored ordering (``_new_ranks``, ``_rank_delta``) and its prefixes
+        probe the stored ranked arrays (``_delta_pairs``) — no corpus
+        re-tokenize, no ordering rebuild. Returns ``(_l_key, _r_key, _sim_score)`` with ``_l_key``
+        from the delta and ``_r_key`` from the corpus; the delta-internal
+        pairs the same kernel finds are not included here.
 
         allow_empty semantics are the ``False`` variant (no empty-empty
-        score-1.0 pairs) — an increment row with no tokens matches nothing.
-
-        Skew: the probe join is a plain shuffle join on the rank (not the
-        exploded-amplification shape the measured per-token salting
-        targets), so AQE's skew-join split covers hot tokens here; for
-        small increments Catalyst broadcasts the delta side and skew is
-        moot. If the "increment" approaches corpus size, re-prepare and
-        run the full kernel instead — that is the salted, measured path.
+        score-1.0 pairs) — an increment row with no tokens matches nothing;
+        NULL rows are dropped.
         """
-        from .set_sim_join import _COMP_COL_FN
+        attrs = (delta_key_attr, delta_join_attr)
+        ranked = self._rank_delta(delta, self._new_ranks(delta, *attrs), *attrs)
+        return self._delta_pairs(ranked, measure, threshold, comp_op)
 
-        dk = delta_key_attr or self.key_attr
-        da = delta_join_attr or self.join_attr
-        d = (
-            delta.select(F.col(dk).alias("_l_key"), F.col(da).alias("_s"))
-            .where(F.col("_s").isNotNull())
-            .withColumn("_dt", self.tokenizer.spark_col(F.col("_s")))
-            .select("_l_key", F.size("_dt").alias("_l_full"), "_dt")
+    def _delta_tokens(
+        self, delta: DataFrame, key_attr: str | None, join_attr: str | None
+    ) -> DataFrame:
+        """``(_l_key, token)``, one row per token of each delta row; NULL and
+        empty rows have none — under allow_empty=False they match nothing."""
+        return delta.select(
+            F.col(key_attr or self.key_attr).alias("_l_key"),
+            F.explode(
+                self.tokenizer.spark_col(F.col(join_attr or self.join_attr))
+            ).alias("token"),
         )
-        # one ordering lookup serves both the probe and the known-rank arrays
-        exr = (
-            d.select("_l_key", F.explode("_dt").alias("token"))
-            .join(self.ordering.select("token", "rank"), "token")
-            .select("_l_key", "rank")
-        )
-        known = exr.groupBy("_l_key").agg(
-            F.array_sort(F.collect_list("rank")).alias("_l_ranked")
-        )
-        dr = (
-            d.join(known, "_l_key", "left")
-            .withColumn(
-                "_l_ranked",
-                F.coalesce(F.col("_l_ranked"), F.array().cast("array<long>")),
-            )
-            .select("_l_key", "_l_full", "_l_ranked")
-        )
-        # corpus prefix: a slice of the persisted ranked arrays — the only
-        # corpus-wide work per call, and it is pure column arithmetic
-        pref = (
-            self.ranked.withColumn(
-                "_pfx", fm.prefix_length_col(F.col("_l_size"), measure, threshold)
-            )
-            .select(
-                F.col("_l_key").alias("_r_key"),
-                F.col("_l_size").alias("_r_size"),
-                F.posexplode(F.expr("slice(_l_ranked, 1, _pfx)")).alias(
-                    "_r_pos", "rank"
-                ),
-            )
-        )
-        # delta prefix: length from the FULL size (unseen tokens sort last in
-        # the extended order, so the known part of the true prefix is exactly
-        # this slice); position within the known array IS the position within
-        # the full sorted set for every known token
-        probe = (
-            dr.withColumn(
-                "_pfx", fm.prefix_length_col(F.col("_l_full"), measure, threshold)
-            )
-            .select(
-                "_l_key",
-                "_l_full",
-                F.size("_l_ranked").alias("_l_known"),
-                F.posexplode(F.expr("slice(_l_ranked, 1, _pfx)")).alias(
-                    "_l_pos", "rank"
-                ),
-            )
-        )
-        # PPJoin position bound (set_sim_join.py's per-row formulation): the
-        # pair's min-rank shared token attains the maximum of the bound, so
-        # filtering rows before the distinct loses no qualifying pair
-        pos_ub = F.lit(1) + F.least(
-            F.col("_l_known") - F.col("_l_pos") - 1,
-            F.col("_r_size") - F.col("_r_pos") - 1,
-        )
-        cand = (
-            probe.join(pref, "rank")
-            .where(
-                (F.col("_r_size")
-                 >= fm.size_lower_bound_col(F.col("_l_full"), measure, threshold))
-                & (F.col("_r_size")
-                   <= fm.size_upper_bound_col(F.col("_l_full"), measure, threshold))
-                & (pos_ub >= fm.overlap_threshold_col(
-                    F.col("_l_full"), F.col("_r_size"), measure, threshold))
-            )
-            .select("_l_key", "_r_key")
-            .distinct()
-        )
-        corpus_r = self.ranked.select(
-            F.col("_l_key").alias("_r_key"),
-            F.col("_l_ranked").alias("_r_ranked"),
-            F.col("_l_size").alias("_r_size"),
-        )
-        j = cand.join(dr, "_l_key").join(corpus_r, "_r_key")
-        ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
-        ls = F.col("_l_full").cast("double")
-        rs = F.col("_r_size").cast("double")
-        if measure == "jaccard":
-            score = ov / (ls + rs - ov)
-        elif measure == "cosine":
-            score = ov / F.sqrt(ls * rs)
-        elif measure == "dice":
-            score = F.lit(2.0) * ov / (ls + rs)
-        else:
-            raise ValueError(f"unsupported measure for delta join: {measure}")
+
+    def _new_ranks(
+        self,
+        delta: DataFrame,
+        key_attr: str | None = None,
+        join_attr: str | None = None,
+    ) -> DataFrame:
+        """``(token, rank)`` for the delta's tokens that the stored ordering
+        lacks: the rows that extend it when the delta is folded in.
+
+        Unseen tokens rank BELOW every stored rank: the increment after
+        ``self._epoch`` folds owns the band ``[-e·2^48, -(e-1)·2^48)``,
+        e = ``self._epoch + 1``; inside it a token's rank is its hash bucket
+        ``<< 38`` plus its dense rank among that bucket's new tokens in token
+        order. Ranks are therefore distinct, fixed once written, and found
+        by a partitioned window — no collect and no max-rank job. Prefix and
+        position filtering are exact under ANY fixed total token order
+        applied to both sides of a pair (AllPairs/PPJoin); stored arrays
+        contain no unseen token, so they are already sorted in the extended
+        order. Putting the delta's new — hence rare — tokens first also
+        keeps the frequency heuristic: they lead the delta prefixes and
+        match only delta rows that share them. Bounds: < 2^15 increments,
+        < 2^38 new tokens per bucket per increment.
+        """
+        bucket = F.pmod(F.xxhash64("token"), F.lit(1 << _BUCKET_BITS))
+        # window first, then distinct: the window's exchange on the bucket
+        # already clusters (bucket, token), so the distinct adds none
         return (
-            j.withColumn("_sim_score", score)
-            .where(_COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold)))
-            .select("_l_key", "_r_key", "_sim_score")
+            self._delta_tokens(delta, key_attr, join_attr)
+            .join(self.ordering.select("token"), "token", "left_anti")
+            .withColumn("_b", bucket)
+            .select(
+                "_b",
+                "token",
+                (
+                    F.lit(-((self._epoch + 1) << _BAND_BITS))
+                    + F.shiftleft(F.col("_b"), _BAND_BITS - _BUCKET_BITS)
+                    + F.dense_rank().over(Window.partitionBy("_b").orderBy("token"))
+                    - 1
+                ).alias("rank"),
+            )
+            .distinct()
+            .select("token", "rank")
         )
+
+    def _rank_delta(
+        self,
+        delta: DataFrame,
+        new_ranks: DataFrame,
+        key_attr: str | None = None,
+        join_attr: str | None = None,
+    ) -> DataFrame:
+        """The delta's ranked rows ``(_l_key, _l_ranked, _l_size)``, like
+        ``self.ranked``, under the stored ordering extended by ``new_ranks``
+        (``_new_ranks`` of the same delta) — complete: every token has a
+        rank, so sizes and overlaps come from one array."""
+        return (
+            self._delta_tokens(delta, key_attr, join_attr)
+            .join(
+                self.ordering.select("token", "rank").unionByName(new_ranks),
+                "token",
+            )
+            .groupBy("_l_key")
+            .agg(F.array_sort(F.collect_list("rank")).alias("_l_ranked"))
+            .select("_l_key", "_l_ranked", F.size("_l_ranked").alias("_l_size"))
+        )
+
+    def _delta_pairs(
+        self,
+        ranked: DataFrame,
+        measure: str,
+        threshold: float,
+        comp_op: str = ">=",
+        internal: bool = False,
+    ) -> DataFrame:
+        """The delta kernel: prefixes of ``ranked`` (``_rank_delta``) probe
+        the corpus prefixes → ``(_l_key, _r_key, _sim_score)``.
+
+        It runs the prefix explode, size and position filters and inline
+        verify of ``set_sim_join_pairs`` (``_prefix_explode`` /
+        ``_filter_and_verify``); the corpus side is a slice of the stored
+        ranked arrays, pure column arithmetic. With ``internal=True`` the
+        right side is corpus ∪ delta, tagged ``_r_delta``, and the
+        delta-internal pairs come out once each, ``_l_key < _r_key``.
+
+        Skew: the probe join is a plain shuffle join on the rank, so AQE's
+        skew-join split covers hot tokens; for small increments Catalyst
+        broadcasts the delta side. An "increment" near corpus size belongs
+        in the full, salted kernel instead.
+        """
+
+        def right(rk):
+            return _prefix_explode(
+                rk.select(
+                    F.col("_l_key").alias("_r_key"),
+                    F.col("_l_ranked").alias("_r_ranked"),
+                    F.col("_l_size").alias("_r_size"),
+                ),
+                "r", measure, threshold, carry_ranked=True,
+            )
+
+        pr, pair_pred = right(self.ranked), None
+        if internal:
+            pr = pr.withColumn("_r_delta", F.lit(False)).unionByName(
+                right(ranked).withColumn("_r_delta", F.lit(True))
+            )
+            pair_pred = ~F.col("_r_delta") | (F.col("_l_key") < F.col("_r_key"))
+        pl = _prefix_explode(ranked, "l", measure, threshold, carry_ranked=True)
+        joined = _filter_and_verify(
+            pl.join(pr, "_tok"), measure, threshold, comp_op, pair_pred=pair_pred
+        )
+        return distinct_pairs(joined, None, "_sim_score")

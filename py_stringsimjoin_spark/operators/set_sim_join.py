@@ -89,6 +89,86 @@ def _append_empty_and_missing(
     return pairs
 
 
+def _prefix_explode(
+    rk: DataFrame, side: str, measure: str, threshold: float, carry_ranked: bool
+) -> DataFrame:
+    """One row per prefix token of a ranked table
+    ``(_{side}_key, _{side}_ranked, _{side}_size)``: key, size, the token's
+    position ``_{side}_pos`` and rank ``_tok``; the ranked array rides along
+    for the inline verify when ``carry_ranked``."""
+    key, ranked, size = f"_{side}_key", f"_{side}_ranked", f"_{side}_size"
+    return rk.withColumn(
+        "_pfx", fm.prefix_length_col(F.col(size), measure, threshold)
+    ).select(
+        key,
+        size,
+        *([ranked] if carry_ranked else []),
+        F.posexplode(F.expr(f"slice({ranked}, 1, _pfx)")).alias(f"_{side}_pos", "_tok"),
+    )
+
+
+def _filter_and_verify(
+    joined: DataFrame,
+    measure: str,
+    threshold: float,
+    comp_op: str,
+    position_filter: bool = True,
+    verify: bool = True,
+    pair_pred=None,
+) -> DataFrame:
+    """The filter stack over token-joined prefix rows: size bounds, an
+    optional pair predicate, the per-row position bound, and the inline
+    exact verify (adds ``_sim_score``). Rows stay one per shared prefix
+    token; the caller dedups pairs."""
+    joined = joined.where(
+        (F.col("_r_size") >= fm.size_lower_bound_col(F.col("_l_size"), measure, threshold))
+        & (F.col("_r_size") <= fm.size_upper_bound_col(F.col("_l_size"), measure, threshold))
+    )
+    if pair_pred is not None:
+        joined = joined.where(pair_pred)
+    if position_filter:
+        # positional overlap upper bound evaluated PER JOINED ROW, before any
+        # aggregation: for a shared token at positions (lp, rp),
+        # overlap ≤ count_so_far + min(remaining) and the min-rank shared
+        # token attains the MAXIMUM of this bound over a pair's rows — so
+        # "pair passes at its min-rank token" ⟺ "any row passes". Filtering
+        # rows first keeps the whole prune inside whole-stage codegen and
+        # shrinks the distinct() that follows by ~an order of magnitude
+        # (no groupBy over the full joined stream at all).
+        ub = F.lit(1) + F.least(
+            F.col("_l_size") - F.col("_l_pos") - 1,
+            F.col("_r_size") - F.col("_r_pos") - 1,
+        )
+        joined = joined.where(
+            ub >= fm.overlap_threshold_col(
+                F.col("_l_size"), F.col("_r_size"), measure, threshold
+            )
+        )
+    if verify:
+        # exact verify in pure JVM: the ranked arrays are duplicate-free
+        # ints, so array_intersect size IS the set overlap; the score
+        # arithmetic is the oracle's (identical IEEE-754 double ops → oracle
+        # parity). No Arrow transfer, no Python workers — whole-stage
+        # codegen end to end. (The previous mapInPandas verify spent ~95% of
+        # its wall time serializing the candidate arrays to Python: 6.1M
+        # pairs ≈ 130 s vs ~10 s JVM-side, measured at sf0.1.)
+        ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
+        ls = F.size("_l_ranked").cast("double")
+        rs = F.size("_r_ranked").cast("double")
+        if measure == "jaccard":
+            score = ov / (ls + rs - ov)
+        elif measure == "cosine":
+            score = ov / F.sqrt(ls * rs)
+        elif measure == "dice":
+            score = F.lit(2.0) * ov / (ls + rs)
+        else:
+            raise ValueError(f"unsupported set-sim measure: {measure}")
+        joined = joined.withColumn("_sim_score", score).where(
+            _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold))
+        )
+    return joined
+
+
 def as_set_tokenizer(tokenizer: Tokenizer) -> Tokenizer:
     """Set-semantics copy (set-sim joins force return_set=True,
     jaccard_join_py.py:144-148)."""
@@ -326,79 +406,17 @@ def set_sim_join_pairs(
     # runs INLINE in the join stage: the only post-join shuffle is the
     # distinct over VERIFIED matches, never the raw candidate stream (3-10×
     # larger on dense / dup-heavy corpora)
-    pl = (
-        l_rk.withColumn(
-            "_pfx", fm.prefix_length_col(F.col("_l_size"), measure, threshold)
-        )
-        .select(
-            "_l_key",
-            "_l_size",
-            *(["_l_ranked"] if verify else []),
-            F.posexplode(F.expr("slice(_l_ranked, 1, _pfx)")).alias("_l_pos", "_tok"),
-        )
+    pl = _prefix_explode(l_rk, "l", measure, threshold, carry_ranked=verify)
+    pr = _prefix_explode(r_rk, "r", measure, threshold, carry_ranked=verify)
+    joined = _filter_and_verify(
+        salted_token_join(
+            pl, pr, hot, pin_partitions=None if tiny_join else n_shuffle
+        ),
+        measure, threshold, comp_op,
+        position_filter=position_filter,
+        verify=verify,
+        pair_pred=(F.col("_l_key") < F.col("_r_key")) if self_join_dedup else None,
     )
-    pr = (
-        r_rk.withColumn(
-            "_pfx", fm.prefix_length_col(F.col("_r_size"), measure, threshold)
-        )
-        .select(
-            "_r_key",
-            "_r_size",
-            *(["_r_ranked"] if verify else []),
-            F.posexplode(F.expr("slice(_r_ranked, 1, _pfx)")).alias("_r_pos", "_tok"),
-        )
-    )
-
-    joined = salted_token_join(
-        pl, pr, hot, pin_partitions=None if tiny_join else n_shuffle
-    ).where(
-        (F.col("_r_size") >= fm.size_lower_bound_col(F.col("_l_size"), measure, threshold))
-        & (F.col("_r_size") <= fm.size_upper_bound_col(F.col("_l_size"), measure, threshold))
-    )
-    if self_join_dedup:
-        joined = joined.where(F.col("_l_key") < F.col("_r_key"))
-
-    if position_filter:
-        # positional overlap upper bound evaluated PER JOINED ROW, before any
-        # aggregation: for a shared token at positions (lp, rp),
-        # overlap ≤ count_so_far + min(remaining) and the min-rank shared
-        # token attains the MAXIMUM of this bound over a pair's rows — so
-        # "pair passes at its min-rank token" ⟺ "any row passes". Filtering
-        # rows first keeps the whole prune inside whole-stage codegen and
-        # shrinks the distinct() that follows by ~an order of magnitude
-        # (no groupBy over the full joined stream at all).
-        ub = F.lit(1) + F.least(
-            F.col("_l_size") - F.col("_l_pos") - 1,
-            F.col("_r_size") - F.col("_r_pos") - 1,
-        )
-        joined = joined.where(
-            ub >= fm.overlap_threshold_col(
-                F.col("_l_size"), F.col("_r_size"), measure, threshold
-            )
-        )
-
-    if verify:
-        # exact verify in pure JVM: the ranked arrays are duplicate-free
-        # ints, so array_intersect size IS the set overlap; the score
-        # arithmetic is the oracle's (identical IEEE-754 double ops → oracle
-        # parity). No Arrow transfer, no Python workers — whole-stage
-        # codegen end to end. (The previous mapInPandas verify spent ~95% of
-        # its wall time serializing the candidate arrays to Python: 6.1M
-        # pairs ≈ 130 s vs ~10 s JVM-side, measured at sf0.1.)
-        ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
-        ls = F.size("_l_ranked").cast("double")
-        rs = F.size("_r_ranked").cast("double")
-        if measure == "jaccard":
-            score = ov / (ls + rs - ov)
-        elif measure == "cosine":
-            score = ov / F.sqrt(ls * rs)
-        elif measure == "dice":
-            score = F.lit(2.0) * ov / (ls + rs)
-        else:
-            raise AssertionError(measure)
-        joined = joined.withColumn("_sim_score", score).where(
-            _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold))
-        )
     # duplicates (one per shared prefix token that survived the filters)
     # carry identical scores; dedup the (verified) pairs
     pairs = distinct_pairs(joined, packer, *(["_sim_score"] if verify else []))

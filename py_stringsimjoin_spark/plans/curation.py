@@ -44,7 +44,7 @@ from ..operators.dedup import (
 )
 from ..operators.splits import assign_splits
 from ..operators.textclean import gopher_quality_filter, remove_boilerplate_lines
-from .pipeline import Stage, _fingerprint
+from .pipeline import Stage, _fingerprint, commit_swap, recover_swap
 
 
 class CurationPipeline:
@@ -205,16 +205,15 @@ class CurationPipeline:
           requires the recount; splits are per-key deterministic and
           cannot move).
 
-        Stage dirs rewrite via ``__next`` + atomic rename (each new stage
-        is derived FROM the old one); downstream manifests are removed so
-        the tail stages recompute instead of wrongly resuming.
+        Stages and their side tables are staged under ``__next`` names
+        (each new stage is derived FROM the old one) and published together
+        at one commit point (``pipeline.commit_swap``); downstream manifests
+        are removed so the tail stages recompute instead of wrongly
+        resuming.
         """
-        import shutil
-
         st_canon = Stage(self.workdir, "01_canon")
         st_nd = Stage(self.workdir, "02_neardup")
-        self._recover_swap(st_canon, ())
-        self._recover_swap(st_nd, ("__buckets", "__pairs"))
+        recover_swap(self.workdir)
         n_inc = int(st_nd.manifest().get("increment", 0)) + 1
 
         old = st_canon.read(self.spark)
@@ -290,44 +289,16 @@ class CurationPipeline:
         survivors = self._survivors(new_canon, all_pairs)
 
         fp_inc = {"increment": n_inc}
-        staged = []
+        moves = []
         for st, df, side in (
             (st_canon, new_canon, {}),
             (st_nd, survivors, {"__buckets": all_buckets, "__pairs": all_pairs}),
         ):
-            nxt = Stage(self.workdir, os.path.basename(st.dir) + "__next")
-            for suffix, sdf in side.items():
-                sdf.write.mode("overwrite").parquet(nxt.dir + suffix)
             fp = _fingerprint(
                 {**self.params, "stage": os.path.basename(st.dir), **fp_inc}
             )
-            m = nxt.write(df, fp)
-            m.update(fp_inc)
-            staged.append((st, nxt, m, list(side)))
-        import json as _json
-
-        for st, nxt, m, suffixes in staged:
-            # Crash-safe swap: rename the live dirs ASIDE (same-filesystem
-            # rename, cheap) before the staged dirs take their place, and
-            # only delete the aside copies once every rename + the manifest
-            # landed. A crash at any point leaves either the old data live,
-            # or the new data live plus recoverable `__old` leftovers —
-            # never zero copies (see _recover_swap).
-            asides = []
-            for s in [""] + list(suffixes):
-                live, fresh = st.dir + s, nxt.dir + s
-                aside = live + "__old"
-                if os.path.exists(aside):
-                    shutil.rmtree(aside)
-                if os.path.exists(live):
-                    os.rename(live, aside)
-                    asides.append(aside)
-                os.rename(fresh, live)
-            with open(st.manifest_path, "w") as f:
-                _json.dump(m, f, indent=2)
-            os.remove(nxt.manifest_path)
-            for aside in asides:
-                shutil.rmtree(aside)
+            moves += st.write_staged(df, fp, fp_inc, side)
+        commit_swap(self.workdir, moves)
         # tail stages are derived from 02_neardup: force their recompute
         for name in ("03_hygiene", "04_scrub", "05_splits"):
             p = Stage(self.workdir, name).manifest_path
@@ -337,36 +308,6 @@ class CurationPipeline:
         self.scrub()
         self.splits()
         return Stage(self.workdir, "05_splits").read(self.spark)
-
-    @staticmethod
-    def _recover_swap(stage: Stage, suffixes: tuple) -> None:
-        """Recover from a crash mid-:meth:`increment` swap.
-
-        Swap invariant: a ``__old`` aside dir only exists while its live
-        replacement is being (or has been) renamed into place — so if the
-        live dir is MISSING, the aside copy is the only data and is
-        restored; if both exist, the swap's renames completed and the
-        aside is garbage. Leftover ``__next`` staging dirs are always
-        incomplete output and are removed (the increment re-runs them).
-        """
-        import shutil
-
-        for s in ("",) + tuple(suffixes):
-            live = stage.dir + s
-            aside = live + "__old"
-            if os.path.exists(aside):
-                if os.path.exists(live):
-                    shutil.rmtree(aside)
-                else:
-                    os.rename(aside, live)
-            nxt = stage.dir + "__next" + s
-            if os.path.exists(nxt):
-                shutil.rmtree(nxt)
-        nxt_manifest = Stage(
-            os.path.dirname(stage.dir), os.path.basename(stage.dir) + "__next"
-        ).manifest_path
-        if os.path.exists(nxt_manifest):
-            os.remove(nxt_manifest)
 
     # ------------------------------------------------------------------ run
     def run(self, pages: DataFrame) -> DataFrame:

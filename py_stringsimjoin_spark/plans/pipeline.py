@@ -8,10 +8,19 @@ manifest fingerprint matches its params + upstream fingerprint).
 Stages
   01_extract   pages → (url, join_attr, lang); text re-derived from html
                JVM-side (byte-identical invariant asserted on a sample)
-  02_blocking  self-join candidate pairs via the prefix/size/position plan
-               (set_sim_join kernel with l<r dedup)  → (l_url, r_url)
+  02_blocking  a PreparedSetSimCorpus over the extracted docs, self-joined
+               by the prefix/size/position plan with l<r dedup
+               → (l_url, r_url). Its global token ordering and ranked
+               arrays are kept as the side tables 02_blocking__ordering and
+               02_blocking__ranked, one parquet dir per epoch (0 here, one
+               more per increment)
   03_scoring   vectorized verify (jaccard by default) → (l_url, r_url, score)
   04_clusters  connected components over match edges → (url, cluster_id)
+
+``increment`` folds a crawl delta into this state through the side tables:
+only the delta is tokenized and ranked, one delta prefix join finds its
+verified edges, and 01_extract, 04_clusters and the side tables' new epoch
+are published at one commit point (``commit_swap``).
 
 Manifests record row counts, per-stage partition counts and per-partition row
 lineage, wall-clock, and candidate-pairs/sec for the scoring stage — the
@@ -22,15 +31,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.tokenizers import WhitespaceTokenizer
-from ..operators.connected_components import connected_components
+from ..operators.connected_components import connected_components, update_components
+from ..operators.prepared import PreparedSetSimCorpus
 from .cache import engine_cache_scope
-from ..operators.set_sim_join import set_sim_join_pairs
 from ..sources.pages import extract_text_col, extract_title_col
 
 
@@ -38,6 +49,65 @@ def _fingerprint(params: dict) -> str:
     import hashlib
 
     return hashlib.sha256(json.dumps(params, sort_keys=True).encode()).hexdigest()[:16]
+
+
+#: the swap journal: while it exists, its moves are committed
+_SWAP_JOURNAL = "_swap.json"
+
+
+def commit_swap(workdir: str, moves: list[tuple[str, str]]) -> None:
+    """Move every staged path onto its live path, committed at ONE point.
+
+    ``moves`` is ``[(staged, live), ...]`` — directories or files, all under
+    ``workdir``. The commit point is the atomic rename of the journal that
+    lists them; :func:`recover_swap` then performs the moves, and re-runs
+    them after a crash at any later step, so either every live path is the
+    staged one or none is.
+    """
+    journal = os.path.join(workdir, _SWAP_JOURNAL)
+    with open(journal + "__next", "w") as f:
+        json.dump(moves, f)
+    os.replace(journal + "__next", journal)
+    recover_swap(workdir)
+
+
+def recover_swap(workdir: str) -> None:
+    """Finish a committed :func:`commit_swap`, and drop uncommitted staging.
+
+    A live directory is renamed ``__old`` aside before its staged copy takes
+    its place, and asides are deleted only after every move landed — so a
+    crash leaves no move half done that this cannot finish, and never zero
+    copies. Without a journal nothing was committed: every ``__next`` entry
+    of ``workdir`` is incomplete staging and is removed.
+    """
+    journal = os.path.join(workdir, _SWAP_JOURNAL)
+    if os.path.exists(journal):
+        with open(journal) as f:
+            moves = json.load(f)
+        for staged, live in moves:
+            if not os.path.exists(staged):
+                continue  # moved before the crash
+            if os.path.isdir(staged):
+                aside = live + "__old"
+                if os.path.exists(live):
+                    if os.path.exists(aside):
+                        shutil.rmtree(aside)
+                    os.rename(live, aside)
+                os.makedirs(os.path.dirname(live), exist_ok=True)
+                os.rename(staged, live)
+            else:
+                os.replace(staged, live)
+        for _, live in moves:
+            if os.path.exists(live + "__old"):
+                shutil.rmtree(live + "__old")
+        os.remove(journal)
+    for name in os.listdir(workdir):
+        if "__next" in name:
+            path = os.path.join(workdir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
 
 
 class Stage:
@@ -64,7 +134,8 @@ class Stage:
         t0 = time.time()
         df.write.mode("overwrite").parquet(self.dir)
         spark = df.sparkSession
-        written = spark.read.parquet(self.dir)
+        # the schema is known: reading with it skips the inference job
+        written = spark.read.schema(df.schema).parquet(self.dir)
         per_part = (
             written.withColumn("_p", F.spark_partition_id())
             .groupBy("_p")
@@ -117,14 +188,38 @@ class Stage:
                 "max": None if summary["p_max"] is None else int(summary["p_max"]),
             },
             "wall_sec": round(time.time() - t0, 3),
+            "schema": df.schema.jsonValue(),
         }
         manifest.update(extra or {})
         with open(self.manifest_path, "w") as f:
             json.dump(manifest, f, indent=2)
         return manifest
 
+    def write_staged(
+        self,
+        df: DataFrame,
+        fingerprint: str,
+        extra: dict | None = None,
+        side: dict[str, DataFrame] | None = None,
+    ) -> list[tuple[str, str]]:
+        """Write ``df``, its manifest and the ``side`` tables (suffix →
+        DataFrame) to this stage's ``__next`` copy; return the
+        ``(staged, live)`` moves that :func:`commit_swap` publishes."""
+        nxt = Stage(os.path.dirname(self.dir), os.path.basename(self.dir) + "__next")
+        moves = []
+        for suffix, sdf in (side or {}).items():
+            sdf.write.mode("overwrite").parquet(nxt.dir + suffix)
+            moves.append((nxt.dir + suffix, self.dir + suffix))
+        nxt.write(df, fingerprint, {**(extra or {}), "path": self.dir})
+        return moves + [(nxt.dir, self.dir), (nxt.manifest_path, self.manifest_path)]
+
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.dir)
+        # the manifest's schema spares the read its inference job
+        schema = self.manifest().get("schema")
+        reader = spark.read if schema is None else spark.read.schema(
+            StructType.fromJson(schema)
+        )
+        return reader.parquet(self.dir)
 
     def manifest(self) -> dict:
         with open(self.manifest_path) as f:
@@ -197,28 +292,34 @@ class LinkagePipeline:
         docs = st_in.read(self.spark)
         if self.num_partitions:
             docs = docs.repartition(self.num_partitions, "url")
-        # scope the engine caches to this stage: the join persists
-        # ranked-token intermediates; the stage output is checkpointed to
-        # parquet, so exactly the caches created here are freed on exit —
-        # caches owned by the caller or by other in-flight engine plans
-        # survive (plans/cache.engine_cache_scope)
+        # scope the engine caches to this stage: the prepared corpus persists
+        # its ordering and ranked arrays; both are also written as the
+        # stage's side tables, so exactly the caches created here are freed
+        # on exit — caches owned by the caller or by other in-flight engine
+        # plans survive (plans/cache.engine_cache_scope)
         with engine_cache_scope():
-            pairs = set_sim_join_pairs(
+            corpus = PreparedSetSimCorpus(docs, "url", self.join_attr, self.tokenizer)
+            side = {
+                "ordering": corpus.ordering.select("token", "rank"),
+                "ranked": corpus.ranked,
+            }
+            for name, df in side.items():
+                # epoch 0 of the store; each increment adds its own epoch dir
+                shutil.rmtree(f"{st.dir}__{name}", ignore_errors=True)
+                df.write.parquet(f"{st.dir}__{name}/0")
+            pairs = corpus.join_pairs(
                 self.measure,
-                docs,
-                docs,
-                "url",
-                "url",
-                self.join_attr,
-                self.join_attr,
-                self.tokenizer,
                 self.threshold,
                 comp_op=">=",
                 allow_empty=False,
                 self_join_dedup=True,
                 verify=False,
             )
-            m = st.write(pairs.select("_l_key", "_r_key"), fp)
+            m = st.write(
+                pairs.select("_l_key", "_r_key"),
+                fp,
+                {"side_schemas": {n: df.schema.jsonValue() for n, df in side.items()}},
+            )
         return m
 
     def scoring(self) -> dict:
@@ -286,31 +387,34 @@ class LinkagePipeline:
 
         Equivalent to re-running the FULL pipeline over (old ∪ new) pages —
         the incremental-vs-full equivalence is asserted in
-        tests/test_pipeline_increment.py — but the work is delta-shaped:
+        tests/test_pipeline_increment.py — but only the delta is tokenized,
+        ranked and joined:
 
         * extract only the new pages (urls already present are recrawls and
           keep their first version — the corpus is append-only);
-        * candidate generation is the TWO-TABLE prefix-filter join
-          new-vs-(old ∪ new): the corpus is scanned, never self-joined;
-          old-old pairs were found by the original run and cannot change;
-        * scoring verifies only the delta candidates;
-        * clustering folds the delta match edges into the existing
-          assignment with ``update_components`` (contracted-graph CC sized
-          by the delta + broadcast remap) — no full re-cluster.
+        * rank the new docs against the stored ordering (the ``02_blocking``
+          side tables): tokens never seen before get fixed new ranks
+          (``PreparedSetSimCorpus._new_ranks``, ``_rank_delta``);
+        * one delta prefix join against the stored ranked arrays ∪ the
+          delta's own yields the verified new match edges, delta-internal
+          pairs included (``_delta_pairs``); old-old pairs were found by the
+          original run and cannot change;
+        * clustering folds those edges into the existing assignment with
+          ``update_components`` (contracted-graph CC sized by the delta +
+          broadcast remap) — no full re-cluster.
 
-        Stage dirs are rewritten via write-to-``__next`` + atomic rename
-        (the new 01_extract/04_clusters are derived FROM the old ones; an
-        in-place overwrite would destroy its own input mid-plan). Each
-        increment bumps an ``increment`` counter in the manifests, so a
-        crashed increment re-runs from its own beginning while the base
-        stages stay resumable as before.
+        No corpus row is re-tokenized and no ordering is rebuilt. Everything
+        is staged under ``__next`` names (the new 01_extract/04_clusters are
+        derived FROM the live ones), then ``01_extract``, ``04_clusters``
+        and the delta's epoch of the side tables (its new ordering rows and
+        ranked rows) are published at ONE commit point (``commit_swap``):
+        a crash before it leaves the old state, a crash after it is
+        finished by the next call's ``recover_swap``. Each increment bumps an
+        ``increment`` counter in the manifests.
         """
-        import shutil
-
-        from ..operators.connected_components import update_components
-        from ..operators.matcher import verify_pairs
-
+        recover_swap(self.workdir)
         st_ext = Stage(self.workdir, "01_extract")
+        st_block = Stage(self.workdir, "02_blocking")
         st_clu = Stage(self.workdir, "04_clusters")
         n_inc = int(st_clu.manifest().get("increment", 0)) + 1
         old_docs = st_ext.read(self.spark)
@@ -320,76 +424,60 @@ class LinkagePipeline:
             extract_title_col(F.col("html")).alias("title"),
             "lang",
         ).join(old_docs.select("url"), "url", "left_anti")
+        # the store holds one dir per epoch: 0 from blocking, then one per
+        # increment; new-token ranks are banded by epoch, so read it from
+        # what is stored rather than from a counter
+        store = {
+            name: f"{st_block.dir}__{name}" for name in ("ordering", "ranked")
+        }
+        schemas = st_block.manifest()["side_schemas"]
+        epoch = max(int(e) for e in os.listdir(store["ranked"]))
+        corpus = PreparedSetSimCorpus._of(
+            old_docs, "url", self.join_attr, self.tokenizer,
+            *(
+                self.spark.read.schema(StructType.fromJson(schemas[name]))
+                .option("recursiveFileLookup", "true")
+                .parquet(d)
+                for name, d in store.items()
+            ),
+            epoch=epoch,
+        )
+        # stage the store's new epoch; each write is read back (its schema
+        # known, so without an inference job) instead of recomputed
+        moves = []
+
+        def stage(name, df):
+            staged = f"{st_block.dir}__next__{name}/{epoch + 1}"
+            df.write.mode("overwrite").parquet(staged)
+            moves.append((staged, f"{store[name]}/{epoch + 1}"))
+            return self.spark.read.schema(df.schema).parquet(staged)
+
+        new_ranks = stage("ordering", corpus._new_ranks(new_docs))
+        ranked = stage("ranked", corpus._rank_delta(new_docs, new_ranks))
+        edges = corpus._delta_pairs(
+            ranked, self.measure, self.threshold, internal=True
+        )
+        # new docs enter the assignment as singletons, so the update covers
+        # every url of the grown corpus
+        assign = (
+            st_clu.read(self.spark)
+            .unionByName(new_docs.select("url", F.col("url").alias("cluster_id")))
+            .select(F.col("url").alias("node"), F.col("cluster_id").alias("component"))
+        )
+        clusters = update_components(
+            assign, edges, src_col="_l_key", dst_col="_r_key"
+        ).select(F.col("node").alias("url"), F.col("component").alias("cluster_id"))
         all_docs = old_docs.unionByName(new_docs)
-
-        with engine_cache_scope():
-            cand = set_sim_join_pairs(
-                self.measure,
-                new_docs,
-                all_docs,
-                "url",
-                "url",
-                self.join_attr,
-                self.join_attr,
-                self.tokenizer,
-                self.threshold,
-                comp_op=">=",
-                allow_empty=False,
-                verify=False,
+        for st, df, extra in (
+            (st_ext, all_docs, {}),
+            (st_clu, clusters, {"increment": n_inc}),
+        ):
+            fp = _fingerprint(
+                {**self.params, "stage": os.path.basename(st.dir),
+                 "increment": n_inc}
             )
-            # two-table join emits new-new pairs in both orders and the
-            # self pair; canonicalize to l<r once
-            edges = (
-                cand.select(
-                    F.least("_l_key", "_r_key").alias("l_url"),
-                    F.greatest("_l_key", "_r_key").alias("r_url"),
-                )
-                .where(F.col("l_url") != F.col("r_url"))
-                .distinct()
-            )
-            scored = verify_pairs(
-                edges, "l_url", "r_url", all_docs, all_docs,
-                "url", "url", self.join_attr, self.join_attr,
-                self.tokenizer, self.measure, self.threshold, comp_op=">=",
-            )
-            assign = st_clu.read(self.spark).select(
-                F.col("url").alias("node"), F.col("cluster_id").alias("component")
-            )
-            updated = update_components(
-                assign, scored, src_col="l_url", dst_col="r_url"
-            )
-            clusters = (
-                all_docs.select("url")
-                .join(updated, all_docs["url"] == updated["node"], "left")
-                .select(
-                    "url",
-                    F.coalesce(F.col("component"), F.col("url")).alias("cluster_id"),
-                )
-            )
-
-            # derived-from-input rewrites: materialize BOTH __next stages
-            # first (each plan still reads the old dirs), then swap — an
-            # in-place overwrite would destroy its own input mid-plan
-            staged = []
-            for st, df, extra in (
-                (st_ext, all_docs, None),
-                (st_clu, clusters, {"increment": n_inc}),
-            ):
-                nxt = Stage(self.workdir, os.path.basename(st.dir) + "__next")
-                fp = _fingerprint(
-                    {**self.params, "stage": os.path.basename(st.dir),
-                     "increment": n_inc}
-                )
-                m = nxt.write(df, fp)
-                if extra:
-                    m.update(extra)
-                staged.append((st, nxt, m))
-        for st, nxt, m in staged:
-            shutil.rmtree(st.dir)
-            os.rename(nxt.dir, st.dir)
-            with open(st.manifest_path, "w") as f:
-                json.dump(m, f, indent=2)
-            os.remove(nxt.manifest_path)
+            moves += st.write_staged(df, fp, extra)
+        commit_swap(self.workdir, moves)
         return st_clu.read(self.spark)
 
     def run(self, pages: DataFrame) -> DataFrame:

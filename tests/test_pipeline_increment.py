@@ -80,3 +80,129 @@ def test_pipeline_title_blocking(spark, corpus, tmp_path_factory):
         clusters.groupBy("cluster_id").count().where(F.col("count") > 1).count()
     )
     assert n_nontrivial > 0
+
+
+def _split(pages):
+    is_base = F.abs(F.xxhash64("url")) % 10 < 7
+    return pages.where(is_base), pages.where(~is_base)
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, corpus, tmp_path_factory):
+    wd = str(tmp_path_factory.mktemp("pipe_full_ref"))
+    return _clusters_dict(
+        LinkagePipeline(spark, wd, threshold=0.6).run(corpus.drop("cluster_id"))
+    )
+
+
+def test_increment_crash_at_each_rename_recovers(
+    spark, corpus, full_run, tmp_path_factory, monkeypatch
+):
+    """A crash at any rename of the increment's commit, then a re-run of
+    the same increment, ends equal to the full run: never a stage without
+    data, never the delta's urls extracted but left unclustered."""
+    import os
+    import shutil
+
+    base, delta = _split(corpus.drop("cluster_id"))
+    wd_base = str(tmp_path_factory.mktemp("pipe_crash_base"))
+    LinkagePipeline(spark, wd_base, threshold=0.6).run(base)
+
+    real = {"rename": os.rename, "replace": os.replace}
+    calls = []
+
+    def spy(name):
+        def f(src, dst):
+            calls.append(name)
+            return real[name](src, dst)
+        return f
+
+    wd = str(tmp_path_factory.mktemp("pipe_crash_count")) + "/wd"
+    shutil.copytree(wd_base, wd)
+    monkeypatch.setattr(os, "rename", spy("rename"))
+    monkeypatch.setattr(os, "replace", spy("replace"))
+    LinkagePipeline(spark, wd, threshold=0.6).increment(delta)
+    monkeypatch.undo()
+    n_renames = len(calls)
+    assert n_renames >= 2  # at least 01_extract and 04_clusters
+
+    for k in range(n_renames):
+        wd = str(tmp_path_factory.mktemp(f"pipe_crash_{k}")) + "/wd"
+        shutil.copytree(wd_base, wd)
+        pipe = LinkagePipeline(spark, wd, threshold=0.6)
+        seen = []
+
+        def crash(name):
+            def f(src, dst):
+                seen.append(name)
+                if len(seen) == k + 1:
+                    raise OSError(f"injected crash at rename {k}")
+                return real[name](src, dst)
+            return f
+
+        monkeypatch.setattr(os, "rename", crash("rename"))
+        monkeypatch.setattr(os, "replace", crash("replace"))
+        with pytest.raises(OSError, match="injected crash"):
+            pipe.increment(delta)
+        monkeypatch.undo()
+        got = _clusters_dict(pipe.increment(delta))
+        assert got == full_run, f"crash at rename {k}"
+        assert not [n for n in os.listdir(wd) if "__next" in n or "__old" in n]
+
+
+def test_increment_job_bound_and_delta_only_tokenize(
+    spark, corpus, full_run, tmp_path_factory
+):
+    """The increment is one delta join: a bounded number of Spark jobs, and
+    the tokenizer sees the new docs' text only — the corpus side is read
+    from the stored ranked arrays, never re-tokenized."""
+    from pyspark.accumulators import AccumulatorParam
+
+    from py_stringsimjoin_spark.functions.tokenizers import WhitespaceTokenizer
+
+    class SetParam(AccumulatorParam):
+        def zero(self, v):
+            return set()
+
+        def addInPlace(self, a, b):
+            return a | b
+
+    class SpyTokenizer(WhitespaceTokenizer):
+        """Whitespace tokens; every string it tokenizes lands in ``acc``."""
+
+        acc = None
+
+        def spark_col(self, col):
+            acc = self.acc
+
+            def seen(s):
+                acc.add({s})
+                return s
+
+            return super().spark_col(F.udf(seen, "string")(col))
+
+    sc = spark.sparkContext
+    tok = SpyTokenizer()
+    tok.acc = sc.accumulator(set(), SetParam())
+    base, delta = _split(corpus.drop("cluster_id"))
+    wd = str(tmp_path_factory.mktemp("pipe_jobs"))
+    pipe = LinkagePipeline(spark, wd, threshold=0.6, tokenizer=tok)
+    pipe.run(base)
+    assert len(tok.acc.value) > 0  # the spy sees the base run's corpus
+
+    tok.acc = sc.accumulator(set(), SetParam())
+    group = "increment-job-count"
+    sc.setJobGroup(group, "increment job count")
+    try:
+        got = _clusters_dict(pipe.increment(delta))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == full_run
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 30, f"{len(jobs)} jobs"
+    delta_text = {r.text for r in delta.select("text").collect()}
+    seen = tok.acc.value
+    assert seen and seen <= delta_text, (
+        f"{len(seen - delta_text)} tokenized strings are not delta text"
+    )

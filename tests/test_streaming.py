@@ -1,234 +1,6 @@
-import os
+"""Stateless operators run unchanged on a structured stream."""
 
-import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from py_stringsimjoin_spark.functions.tokenizers import WhitespaceTokenizer
-from py_stringsimjoin_spark.streaming.stream_join import (
-    build_static_index,
-    stream_candidates,
-)
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
-
-
-def test_stream_static_candidates(spark, tmp_path):
-    corpus = spark.createDataFrame(
-        [
-            ("u1", "deep learning for entity resolution"),
-            ("u2", "spark sql query optimization"),
-            ("u3", "completely different topic words"),
-        ],
-        SCHEMA,
-    )
-    _, prefix, _ = build_static_index(
-        corpus, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4
-    )
-    # stream source: a directory of parquet files
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [
-            ("s1", "deep learning for entity matching"),
-            ("s2", "unrelated totally novel content"),
-        ],
-        SCHEMA,
-    ).write.parquet(src, mode="overwrite")
-
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    cand = stream_candidates(
-        stream, prefix, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4
-    )
-    q = (
-        cand.writeStream.format("memory")
-        .queryName("cand_sink")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {
-            (r["_l_key"], r["_r_key"])
-            for r in spark.sql("select * from cand_sink").collect()
-        }
-    finally:
-        q.stop()
-    assert ("s1", "u1") in rows  # 4 shared tokens of 5/5 → candidate
-    assert all(l != "s2" for l, _ in rows)  # s2 shares nothing
-
-
-def test_stream_matches_end_to_end(spark, tmp_path):
-    from py_stringsimjoin_spark.streaming.stream_join import stream_matches
-
-    corpus = spark.createDataFrame(
-        [
-            ("u1", "deep learning for entity resolution"),
-            ("u2", "spark sql query optimization guide"),
-        ],
-        SCHEMA,
-    )
-    _, prefix, _ = build_static_index(
-        corpus, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4
-    )
-    src = str(tmp_path / "in2")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [("s1", "deep learning for entity matching"), ("s2", "zzz yyy xxx")], SCHEMA
-    ).write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    matches = stream_matches(
-        stream, corpus, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4, prefix
-    )
-    q = (
-        matches.writeStream.format("memory").queryName("match_sink")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {
-            (r["_l_key"], r["_r_key"]): r["_sim_score"]
-            for r in spark.sql("select * from match_sink").collect()
-        }
-    finally:
-        q.stop()
-    assert ("s1", "u1") in rows
-    assert rows[("s1", "u1")] == 4 / 6  # |∩|=4, |∪|=6
-    assert not any(l == "s2" for l, _ in rows)
-
-
-def test_dedup_recrawls(spark, tmp_path):
-    from py_stringsimjoin_spark.streaming.stream_join import dedup_recrawls
-    from pyspark.sql import types as T
-    import datetime
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = str(tmp_path / "in3")
-    os.makedirs(src)
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    spark.createDataFrame(
-        [
-            ("u1", t0, "a"),
-            ("u1", t0 + datetime.timedelta(minutes=5), "a v2"),
-            ("u2", t0, "b"),
-        ],
-        schema,
-    ).write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = dedup_recrawls(stream)
-    q = (
-        out.writeStream.format("memory").queryName("dedup_sink")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        urls = [r["url"] for r in spark.sql("select url from dedup_sink").collect()]
-    finally:
-        q.stop()
-    assert sorted(urls) == ["u1", "u2"]
-
-
-def test_write_matches_stream_sink(spark, tmp_path):
-    from py_stringsimjoin_spark.streaming.stream_join import (
-        stream_matches,
-        write_matches_stream,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            ("u1", "deep learning for entity resolution"),
-            ("u2", "spark sql query optimization"),
-        ],
-        SCHEMA,
-    )
-    _, prefix, _ = build_static_index(
-        corpus, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4
-    )
-    src = str(tmp_path / "incoming2")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [("s1", "deep learning for entity matching")], SCHEMA
-    ).write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    matches = stream_matches(
-        stream, corpus, "url", "text", WhitespaceTokenizer(), "jaccard", 0.4, prefix
-    )
-    out_dir = str(tmp_path / "matches_out")
-    ckpt = str(tmp_path / "ckpt")
-    q = write_matches_stream(matches, out_dir, ckpt, available_now=True)
-    q.awaitTermination(120)
-    got = {
-        (r["_l_key"], r["_r_key"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {("s1", "u1")}
-
-
-def test_windowed_match_counts_streaming_and_batch(spark, tmp_path):
-    """Watermarked event-time windowed aggregation over a match stream; the
-    same plan must also run in batch mode (backfill) with equal results."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    from py_stringsimjoin_spark.streaming.stream_join import windowed_match_counts
-
-    schema = T.StructType(
-        [
-            T.StructField("_l_key", T.StringType()),
-            T.StructField("_r_key", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    t0 = datetime.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        ("s1", "u1", t0),
-        ("s1", "u2", t0 + datetime.timedelta(minutes=1)),
-        ("s2", "u1", t0 + datetime.timedelta(minutes=2)),
-        ("s3", "u9", t0 + datetime.timedelta(minutes=7)),
-    ]
-    src = str(tmp_path / "match_stream")
-    os.makedirs(src)
-    spark.createDataFrame(rows, schema).write.parquet(src, mode="overwrite")
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = windowed_match_counts(stream, "ts", "5 minutes", watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory").queryName("win_sink")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    try:
-        q.awaitTermination(120)
-        got = {
-            (r["window_start"], r["n_matches"], r["n_src_pages"])
-            for r in spark.sql("select * from win_sink").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (t0, 3, 2),                                   # s1, s1, s2 in [0, 5)
-        (t0 + datetime.timedelta(minutes=5), 1, 1),   # s3 in [5, 10)
-    }
-    assert got == want
-
-    # batch backfill: identical expressions over the same parquet
-    batch = windowed_match_counts(spark.read.parquet(src), "ts", "5 minutes")
-    got_b = {
-        (r["window_start"], r["n_matches"], r["n_src_pages"])
-        for r in batch.collect()
-    }
-    assert got_b == want
 
 
 def test_streaming_fs_scoring(spark, tmp_path):
