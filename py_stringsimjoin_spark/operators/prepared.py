@@ -180,7 +180,9 @@ class PreparedSetSimCorpus:
     def stats(self) -> dict:
         """The sampled row count every self-join over this corpus hands to
         the kernel's tiny-join gate; one bounded-sample job, paid by the
-        first ``join_pairs`` (the delta kernel never reads it)."""
+        first ``join_pairs`` (the delta kernel never reads it). A caller
+        that knows the non-NULL row count assigns ``{"n": rows}`` instead,
+        as ``LinkagePipeline.blocking`` does from parquet footers."""
         proj = self.table.select(
             F.col(self.key_attr).alias("_l_key"),
             F.col(self.join_attr).alias("_l_str"),

@@ -249,14 +249,6 @@ def set_sim_join_pairs(
     r_proj = rtable.select(
         F.col(r_key_attr).alias("_r_key"), F.col(r_join_attr).alias("_r_str")
     )
-    # tokenize + the ordering/ranked-table partial aggs run before the first
-    # exchange — widen a narrow scan (plans/layout.py; no-op at production
-    # split counts)
-    from ..plans.layout import widen_small_scan
-
-    l_nn = widen_small_scan(l_proj.where(F.col("_l_str").isNotNull())).withColumn(
-        "_tokens", tok.spark_col(F.col("_l_str"))
-    )
     # self-join detection: same table object + same attrs → tokenize, build
     # the ordering, and rank ONCE; the right side is an alias of the left
     # cache (halves the prep work for clustering/dedup pipelines)
@@ -326,6 +318,14 @@ def set_sim_join_pairs(
                 mp = mp.select("_l_key", "_r_key")
             out = out.unionByName(mp)
         return out
+    # tokenize + the ordering/ranked-table partial aggs run before the first
+    # exchange — widen a narrow scan (plans/layout.py; no-op at production
+    # split counts); only the branches that tokenize pay its planning trip
+    from ..plans.layout import widen_small_scan
+
+    def tokenized(proj, s):
+        return widen_small_scan(proj.where(F.col(s).isNotNull())).withColumn("_tokens", tok.spark_col(F.col(s)))
+
     if _prepared is not None:
         l_rk = _prepared.ranked
         r_rk = l_rk.select(
@@ -334,6 +334,7 @@ def set_sim_join_pairs(
             F.col("_l_size").alias("_r_size"),
         )
     elif is_self:
+        l_nn = tokenized(l_proj, "_l_str")
         ordering = build_token_ordering([(l_nn, "_tokens")]).persist().transform(_tc)
         l_rk = add_ranked_tokens(
             l_nn, ["_l_key"], "_tokens", ordering, "_l_ranked", "_l_size"
@@ -344,9 +345,7 @@ def set_sim_join_pairs(
             F.col("_l_size").alias("_r_size"),
         )
     else:
-        r_nn = widen_small_scan(
-            r_proj.where(F.col("_r_str").isNotNull())
-        ).withColumn("_tokens", tok.spark_col(F.col("_r_str")))
+        l_nn, r_nn = tokenized(l_proj, "_l_str"), tokenized(r_proj, "_r_str")
         ordering = build_token_ordering([(l_nn, "_tokens"), (r_nn, "_tokens")]).persist().transform(_tc)
         l_rk = add_ranked_tokens(
             l_nn, ["_l_key"], "_tokens", ordering, "_l_ranked", "_l_size"

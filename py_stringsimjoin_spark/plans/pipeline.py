@@ -19,17 +19,21 @@ Stages
 
 ``increment`` folds a crawl delta into this state through the side tables:
 only the delta is tokenized and ranked, one delta prefix join finds its
-verified edges, and 01_extract, 04_clusters and the side tables' new epoch
-are published at one commit point (``commit_swap``).
+verified edges, and the delta's part files (appended to 01_extract),
+04_clusters and the side tables' new epoch are published at one commit
+point (``commit_swap``).
 
 Manifests record row counts, per-stage partition counts and per-partition row
 lineage, wall-clock, and candidate-pairs/sec for the scoring stage — the
-metrics surface BASELINE.md requires.
+metrics surface BASELINE.md requires. Counts and lineage are read from the
+footers of the part files a stage wrote (``part_rows``), so a manifest costs
+no Spark job.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
@@ -110,6 +114,19 @@ def recover_swap(workdir: str) -> None:
                 os.remove(path)
 
 
+def part_rows(path: str) -> dict[str, int]:
+    """Rows of each parquet part file in the directory ``path``, by file
+    name, read from the files' footers on the driver — no Spark job. The
+    workdir is a local POSIX path (``commit_swap`` renames in it)."""
+    import pyarrow.parquet as pq
+
+    return {
+        name: pq.read_metadata(os.path.join(path, name)).num_rows
+        for name in sorted(os.listdir(path))
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    }
+
+
 class Stage:
     def __init__(self, workdir: str, name: str):
         self.dir = os.path.join(workdir, name)
@@ -126,69 +143,38 @@ class Stage:
             return False
 
     #: heaviest partitions recorded verbatim in the manifest; the rest are
-    #: summarized as quantiles so the driver collect stays O(TOP_PARTITIONS)
-    #: even at ~10^6 shuffle partitions.
+    #: summarized as quantiles so the manifest stays O(TOP_PARTITIONS) even
+    #: at ~10^6 part files.
     TOP_PARTITIONS = 8
 
     def write(self, df: DataFrame, fingerprint: str, extra: dict | None = None) -> dict:
         t0 = time.time()
         df.write.mode("overwrite").parquet(self.dir)
-        spark = df.sparkSession
-        # the schema is known: reading with it skips the inference job
-        written = spark.read.schema(df.schema).parquet(self.dir)
-        per_part = (
-            written.withColumn("_p", F.spark_partition_id())
-            .groupBy("_p")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-        # Per-partition lineage without an O(#partitions) collect: one
-        # summary row (counts + row-count quantiles) plus the TOP_PARTITIONS
-        # heaviest partitions — bounded driver traffic at any scale, and
-        # both branches collected in ONE action (the shared per-partition
-        # count stage is computed once inside it; two separate collects paid
-        # it twice plus an extra driver round-trip).
-        summary_branch = per_part.agg(
-            F.count(F.lit(1)).alias("n_partitions"),
-            F.coalesce(F.sum("count"), F.lit(0)).alias("n_rows"),
-            F.min("count").alias("p_min"),
-            F.max("count").alias("p_max"),
-            F.expr("percentile_approx(count, array(0.5, 0.9, 0.99))").alias("q"),
-        ).select(
-            F.lit(None).cast("int").alias("_p"),
-            F.lit(None).cast("long").alias("count"),
-            "n_partitions", "n_rows", "p_min", "p_max", "q",
-        )
-        top_branch = (
-            per_part.orderBy(F.col("count").desc(), F.col("_p").asc())
-            .limit(self.TOP_PARTITIONS)
-            .select(
-                "_p", "count",
-                F.lit(None).cast("long").alias("n_partitions"),
-                F.lit(None).cast("long").alias("n_rows"),
-                F.lit(None).cast("long").alias("p_min"),
-                F.lit(None).cast("long").alias("p_max"),
-                F.lit(None).cast("array<double>").alias("q"),
-            )
-        )
-        rows = summary_branch.unionByName(top_branch).collect()
-        summary = next(r for r in rows if r["n_partitions"] is not None)
-        top = [r for r in rows if r["_p"] is not None]
-        q = summary["q"] or [None, None, None]
+        return self.write_manifest(part_rows(self.dir), fingerprint, df.schema, t0, extra)
+
+    def write_manifest(
+        self, rows: dict, fingerprint: str, schema: StructType, t0: float, extra: dict | None = None
+    ) -> dict:
+        """Write the manifest of the part files ``rows`` (name → row count,
+        ``part_rows``); a partition is one non-empty part file."""
+        rows = {k: n for k, n in rows.items() if n}
+        counts = sorted(rows.values())
+
+        def q(p):  # nearest-rank quantile, as percentile_approx returns
+            return counts[max(0, math.ceil(p * len(counts)) - 1)] if counts else None
+
+        top = sorted(rows.items(), key=lambda kv: (-kv[1], kv[0]))[: self.TOP_PARTITIONS]
         manifest = {
             "fingerprint": fingerprint,
             "path": self.dir,
-            "n_rows": int(summary["n_rows"]),
-            "n_partitions": int(summary["n_partitions"]),
-            "partition_rows": {int(r["_p"]): int(r["count"]) for r in top},
+            "n_rows": sum(counts),
+            "n_partitions": len(counts),
+            "partition_rows": dict(top),
             "partition_row_stats": {
-                "min": None if summary["p_min"] is None else int(summary["p_min"]),
-                "p50": None if q[0] is None else int(q[0]),
-                "p90": None if q[1] is None else int(q[1]),
-                "p99": None if q[2] is None else int(q[2]),
-                "max": None if summary["p_max"] is None else int(summary["p_max"]),
+                k: q(p) for k, p in zip(("min", "p50", "p90", "p99", "max"), (0, 0.5, 0.9, 0.99, 1))
             },
             "wall_sec": round(time.time() - t0, 3),
-            "schema": df.schema.jsonValue(),
+            "schema": schema.jsonValue(),
         }
         manifest.update(extra or {})
         with open(self.manifest_path, "w") as f:
@@ -307,6 +293,9 @@ class LinkagePipeline:
                 # epoch 0 of the store; each increment adds its own epoch dir
                 shutil.rmtree(f"{st.dir}__{name}", ignore_errors=True)
                 df.write.parquet(f"{st.dir}__{name}/0")
+            # the tiny-join gate's corpus row count, from the ranked table's
+            # footers instead of a sampled-stats job
+            corpus.stats = {"n": sum(part_rows(f"{st.dir}__ranked/0").values())}
             pairs = corpus.join_pairs(
                 self.measure,
                 self.threshold,
@@ -403,14 +392,15 @@ class LinkagePipeline:
           ``update_components`` (contracted-graph CC sized by the delta +
           broadcast remap) — no full re-cluster.
 
-        No corpus row is re-tokenized and no ordering is rebuilt. Everything
-        is staged under ``__next`` names (the new 01_extract/04_clusters are
-        derived FROM the live ones), then ``01_extract``, ``04_clusters``
-        and the delta's epoch of the side tables (its new ordering rows and
-        ranked rows) are published at ONE commit point (``commit_swap``):
-        a crash before it leaves the old state, a crash after it is
-        finished by the next call's ``recover_swap``. Each increment bumps an
-        ``increment`` counter in the manifests.
+        No corpus row is re-tokenized or rewritten. The delta's docs are
+        written once, to a staged ``01_extract__next`` every step reads back;
+        everything is staged under ``__next`` names and published at ONE
+        commit point (``commit_swap``): the delta's part files move into
+        ``01_extract`` beside the corpus files, and ``04_clusters`` and the
+        side tables' new epoch replace or join the live ones. A crash before
+        it leaves the old state, a crash after it is finished by the next
+        call's ``recover_swap``. Each increment bumps an ``increment``
+        counter in the manifests.
         """
         recover_swap(self.workdir)
         st_ext = Stage(self.workdir, "01_extract")
@@ -418,12 +408,31 @@ class LinkagePipeline:
         st_clu = Stage(self.workdir, "04_clusters")
         n_inc = int(st_clu.manifest().get("increment", 0)) + 1
         old_docs = st_ext.read(self.spark)
-        new_docs = new_pages.select(
+
+        def fp(st):
+            return _fingerprint(
+                {**self.params, "stage": os.path.basename(st.dir), "increment": n_inc}
+            )
+
+        t0 = time.time()
+        nxt_ext = Stage(self.workdir, "01_extract__next")
+        extracted = new_pages.select(
             "url",
             extract_text_col(F.col("html")).alias("text"),
             extract_title_col(F.col("html")).alias("title"),
             "lang",
         ).join(old_docs.select("url"), "url", "left_anti")
+        extracted.write.mode("overwrite").parquet(nxt_ext.dir)
+        new_docs = self.spark.read.schema(extracted.schema).parquet(nxt_ext.dir)
+        # the delta's non-empty part files join the corpus files as they are;
+        # the new manifest's lineage covers both
+        delta_rows = {n: r for n, r in part_rows(nxt_ext.dir).items() if r}
+        moves = [(f"{nxt_ext.dir}/{n}", f"{st_ext.dir}/{n}") for n in delta_rows]
+        nxt_ext.write_manifest(
+            {**part_rows(st_ext.dir), **delta_rows}, fp(st_ext), old_docs.schema, t0,
+            {"path": st_ext.dir},
+        )
+        moves.append((nxt_ext.manifest_path, st_ext.manifest_path))
         # the store holds one dir per epoch: 0 from blocking, then one per
         # increment; new-token ranks are banded by epoch, so read it from
         # what is stored rather than from a counter
@@ -442,10 +451,9 @@ class LinkagePipeline:
             ),
             epoch=epoch,
         )
+
         # stage the store's new epoch; each write is read back (its schema
         # known, so without an inference job) instead of recomputed
-        moves = []
-
         def stage(name, df):
             staged = f"{st_block.dir}__next__{name}/{epoch + 1}"
             df.write.mode("overwrite").parquet(staged)
@@ -467,16 +475,7 @@ class LinkagePipeline:
         clusters = update_components(
             assign, edges, src_col="_l_key", dst_col="_r_key"
         ).select(F.col("node").alias("url"), F.col("component").alias("cluster_id"))
-        all_docs = old_docs.unionByName(new_docs)
-        for st, df, extra in (
-            (st_ext, all_docs, {}),
-            (st_clu, clusters, {"increment": n_inc}),
-        ):
-            fp = _fingerprint(
-                {**self.params, "stage": os.path.basename(st.dir),
-                 "increment": n_inc}
-            )
-            moves += st.write_staged(df, fp, extra)
+        moves += st_clu.write_staged(clusters, fp(st_clu), {"increment": n_inc})
         commit_swap(self.workdir, moves)
         return st_clu.read(self.spark)
 

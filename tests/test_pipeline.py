@@ -82,6 +82,63 @@ def test_manifest_lineage_fields(spark, pages, tmp_path_factory):
         assert sum(m["partition_rows"].values()) == m["n_rows"]
 
 
+def _check_lineage(spark, wd):
+    for name in ("01_extract", "02_blocking", "03_scoring", "04_clusters"):
+        st = Stage(wd, name)
+        m = st.manifest()
+        assert m["n_rows"] == spark.read.parquet(st.dir).count(), name
+        # a partition is one non-empty part file, keyed by its name
+        assert len(m["partition_rows"]) == min(m["n_partitions"], Stage.TOP_PARTITIONS)
+        for part, n in m["partition_rows"].items():
+            assert os.path.isfile(os.path.join(st.dir, part)), (name, part)
+            assert n > 0
+        if m["n_partitions"] <= Stage.TOP_PARTITIONS:
+            assert sum(m["partition_rows"].values()) == m["n_rows"], name
+
+
+def test_manifest_lineage_matches_written_rows(spark, pages, tmp_path_factory):
+    """Footer lineage equals what Spark reads back, after a run and after
+    each of two increments (which append their part files to 01_extract)."""
+    h = F.abs(F.xxhash64("url")) % 10
+    pages_in = pages.drop("cluster_id")
+    wd = str(tmp_path_factory.mktemp("pipeline_lineage"))
+    pipe = LinkagePipeline(spark, wd, threshold=0.6)
+    pipe.run(pages_in.where(h < 6))
+    _check_lineage(spark, wd)
+    pipe.increment(pages_in.where(h.between(6, 7)))
+    _check_lineage(spark, wd)
+    pipe.increment(pages_in.where(h > 7))
+    _check_lineage(spark, wd)
+    assert pipe.metrics()["01_extract"]["n_rows"] == pages_in.count()
+
+
+def test_manifest_of_empty_stage(spark, tmp_path):
+    df = spark.createDataFrame([], "url string, n long")
+    m = Stage(str(tmp_path), "empty").write(df, "fp")
+    assert (m["n_rows"], m["n_partitions"], m["partition_rows"]) == (0, 0, {})
+    assert set(m["partition_row_stats"].values()) == {None}
+
+
+def test_stage_write_runs_no_job_beyond_the_write(spark, pages, tmp_path):
+    """The manifest's lineage comes from the part files' footers: a
+    ``Stage.write`` runs exactly the jobs of a bare parquet write."""
+    sc = spark.sparkContext
+    df = pages.select("url", "lang").repartition(3, "url")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bare = jobs("bare-write", lambda: df.write.parquet(str(tmp_path / "bare")))
+    staged = jobs("stage-write", lambda: Stage(str(tmp_path), "st").write(df, "fp"))
+    assert bare >= 1 and staged == bare
+
+
 def test_pages_table_io_roundtrip(spark, tmp_path):
     from py_stringsimjoin_spark.sources.io import read_pages_table, write_pages_table
     from py_stringsimjoin_spark.sources.pages import generate_pages

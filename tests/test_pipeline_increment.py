@@ -1,5 +1,7 @@
 """Incremental pipeline: increment(delta) ≡ full run over (base ∪ delta)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,6 +29,8 @@ def test_increment_equals_full_run(spark, corpus, tmp_path_factory):
     wd_inc = str(tmp_path_factory.mktemp("pipe_inc"))
     pipe = LinkagePipeline(spark, wd_inc, threshold=0.6)
     pipe.run(base)
+    ext = os.path.join(wd_inc, "01_extract")
+    before = _files(ext)
     got = _clusters_dict(pipe.increment(delta))
 
     wd_full = str(tmp_path_factory.mktemp("pipe_full"))
@@ -36,6 +40,18 @@ def test_increment_equals_full_run(spark, corpus, tmp_path_factory):
     assert got == want
     # and the manifest records the increment epoch
     assert pipe.metrics()["04_clusters"]["increment"] == 1
+    # the delta is appended: the corpus's part files are not rewritten
+    after = _files(ext)
+    assert {n: after.get(n) for n in before} == before
+    assert len(after) > len(before)
+
+
+def _files(d):
+    """name → (size, mtime) of every file in ``d``."""
+    return {
+        n: (os.stat(os.path.join(d, n)).st_size, os.stat(os.path.join(d, n)).st_mtime_ns)
+        for n in os.listdir(d)
+    }
 
 
 def test_second_increment_and_recrawl_dedup(spark, corpus, tmp_path_factory):
@@ -101,7 +117,6 @@ def test_increment_crash_at_each_rename_recovers(
     """A crash at any rename of the increment's commit, then a re-run of
     the same increment, ends equal to the full run: never a stage without
     data, never the delta's urls extracted but left unclustered."""
-    import os
     import shutil
 
     base, delta = _split(corpus.drop("cluster_id"))
@@ -113,7 +128,7 @@ def test_increment_crash_at_each_rename_recovers(
 
     def spy(name):
         def f(src, dst):
-            calls.append(name)
+            calls.append(dst)
             return real[name](src, dst)
         return f
 
@@ -125,6 +140,11 @@ def test_increment_crash_at_each_rename_recovers(
     monkeypatch.undo()
     n_renames = len(calls)
     assert n_renames >= 2  # at least 01_extract and 04_clusters
+    # the delta's part files move into 01_extract, one rename each
+    assert any(
+        os.path.dirname(d).endswith("/01_extract") and d.endswith(".parquet")
+        for d in calls
+    )
 
     for k in range(n_renames):
         wd = str(tmp_path_factory.mktemp(f"pipe_crash_{k}")) + "/wd"
@@ -200,7 +220,7 @@ def test_increment_job_bound_and_delta_only_tokenize(
         sc.setLocalProperty("spark.job.description", None)
     assert got == full_run
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 30, f"{len(jobs)} jobs"
+    assert len(jobs) <= 21, f"{len(jobs)} jobs"
     delta_text = {r.text for r in delta.select("text").collect()}
     seen = tok.acc.value
     assert seen and seen <= delta_text, (
