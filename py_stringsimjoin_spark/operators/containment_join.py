@@ -19,20 +19,20 @@ Physical plan — the asymmetry is the interesting part:
       exploded stream, plans/skew.exploded_hot_token_ranks)
     → size bound:      |r| ≥ ⌈t·|l|⌉            (|∩| ≤ |r|)
     → position bound:  1 + min(|l|−lp−1, |r|−rp−1) ≥ ⌈t·|l|⌉  per joined row
+    → first-shared-token row only (plans/filter_math.first_shared_prefix_token)
     → inline JVM array_intersect exact verify, score = |∩| / |l|  (zero UDF)
-    → distinct over verified matches
 
 Soundness of the left prefix: a qualifying pair shares o = ⌈t·|l|⌉ tokens;
 only o−1 left tokens sit outside the ℓ = |l|−o+1 prefix, so at least one
 shared token is inside it, and the unfiltered right side guarantees the
-join sees that token.
+join sees that token. The pair's minimum-rank shared token is then inside
+the left prefix too, so keeping only its row emits each pair once.
 
 Scale shape: one large shuffle (the token join). The right side exploding
 fully costs Σ|r| join-input rows — same as the overlap/OC joins; the left
 prefix cuts the probe side by ~t. The ranked arrays ride through the
-explode so the verify runs inline in the join stage, and the one post-join
-shuffle is the distinct over verified matches, on the packed primitive long
-whenever both keys fit in 32 bits (plans/pairkey.py).
+explode so the first-shared-token test and the verify run inline in the
+join stage; no pair aggregate follows the join.
 
 ``allow_empty`` mirrors overlap_coefficient's semantics: only (∅,∅) pairs
 score 1.0 (containment of ∅ is vacuous; emitting ∅-in-everything rows would
@@ -47,9 +47,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import filter_math as fm
 from ..plans.cache import tracked_cache as _tc
 from ..plans.output import assemble_output
-from ..plans.pairkey import distinct_pairs, resolve_pair_packer
 from ..plans.validation import (
     COMP_OP_FN,
     validate_attr,
@@ -198,23 +198,23 @@ def containment_join_pairs(
     if position_filter:
         # per joined row: overlap ≤ 1 + min(tokens after lp, tokens after rp);
         # the pair's min-rank shared token attains the max of this bound, so
-        # row-level filtering before the distinct loses no pair (same lemma
-        # as the symmetric kernel's position filter).
+        # its row survives whenever any row of the pair does (same lemma as
+        # the symmetric kernel's position filter).
         ub = F.lit(1) + F.least(
             F.col("_l_size") - F.col("_l_pos") - 1,
             F.col("_r_size") - F.col("_r_pos") - 1,
         )
         joined = joined.where(ub >= _ov_needed_col(F.col("_l_size"), threshold))
 
+    # one row per pair: the verify runs once per pair
+    joined = joined.where(fm.first_shared_prefix_token())
     ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
     ls = F.size("_l_ranked").cast("double")
-    scored = joined.withColumn("_sim_score", ov / ls).where(
-        _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(float(threshold)))
+    pairs = (
+        joined.withColumn("_sim_score", ov / ls)
+        .where(_COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(float(threshold))))
+        .select("_l_key", "_r_key", "_sim_score")
     )
-    # the joined stream holds one row per shared prefix×full token — the
-    # verified-match distinct is the only post-join shuffle
-    packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
-    pairs = distinct_pairs(scored, packer, "_sim_score")
 
     if allow_empty and COMP_OP_FN[comp_op](1.0, threshold):
         l_empty = l_rk.where(F.col("_l_size") == 0).select("_l_key")

@@ -8,14 +8,14 @@ are missed — i.e. the result is exactly
 
 Plan: bag q-gram tokenize → global ordering → ranked arrays (multiplicity
 kept) → explode first min(q·t+1, n) ranked tokens on both sides, join-attr
-string riding along → equi-join on token rank → char-length band
-|len(l)−len(r)| ≤ t → positional α-count prune → **inline JVM
-threshold-bounded ``levenshtein(l, r, t)``** verify (whole-stage codegen,
-banded O(len·t) with early exit; returns −1 above t) → distinct verified
-matches. The verify runs BEFORE any dedup: round-3 measurement showed the
-old distinct-then-rejoin plan spent >90% of its wall shuffling 172M raw
-candidate rows (spill-bound), while verified matches are 5-20× fewer — the
-bounded levenshtein is cheaper per row than shuffling the row. The round-2
+string and prefix array riding along → equi-join on token rank →
+char-length band |len(l)−len(r)| ≤ t → positional α-count prune → the
+pair's first shared q-gram (its first occurrence on both sides) only →
+**inline JVM threshold-bounded ``levenshtein(l, r, t)``** verify
+(whole-stage codegen, banded O(len·t) with early exit; returns −1 above t),
+once per pair. No pair aggregate follows the token join: round-3 measurement
+showed the old distinct-then-rejoin plan spent >90% of its wall shuffling
+172M raw candidate rows (spill-bound). The round-2
 mapInPandas numpy DP verify is gone entirely (it was the engine's last
 Python stage on a join hot path and anti-scaled at high parallelism;
 SCALING.json r2). The disk variant J7 (disk_edit_distance_join) is subsumed
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ..functions.tokenizers import QgramTokenizer
 from ..plans import filter_math as fm
 from ..plans.output import assemble_output
-from ..plans.pairkey import distinct_pairs, resolve_pair_packer
 from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     validate_attr,
@@ -103,11 +102,11 @@ def edit_distance_join(
     tok = _as_bag(tokenizer)
     q = tok.qval
 
-    is_self_t = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
+    is_self = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
     nd_est = None
     if value_dedup == "auto":
         sides = [(ltable, l_join_attr)]
-        if not is_self_t:
+        if not is_self:
             sides.append((rtable, r_join_attr))
         st = sample_plan_stats(sides)  # ONE stats job (plans/stats.py)
         nd_est = st["nd"]
@@ -116,7 +115,7 @@ def edit_distance_join(
         lv = ltable.select(F.col(l_join_attr).alias("_v")).where(
             F.col("_v").isNotNull()
         ).distinct()
-        rv = lv if is_self_t else rtable.select(F.col(r_join_attr).alias("_v")).where(
+        rv = lv if is_self else rtable.select(F.col(r_join_attr).alias("_v")).where(
             F.col("_v").isNotNull()
         ).distinct()
         # expand value pairs back to row pairs keyed on the 16-byte content
@@ -130,7 +129,9 @@ def edit_distance_join(
             value_hash_col(F.col("l__v")).alias("_h1"),
             value_hash_col(F.col("r__v")).alias("_h2"),
             "_sim_score",
-        )
+        # materialized for the same reason as set_sim_join_pairs' value
+        # pairs: otherwise levenshtein runs once per expanded row
+        ).repartition("_h1")
         l_map = ltable.where(F.col(l_join_attr).isNotNull()).select(
             F.col(l_key_attr).alias("_l_key"),
             value_hash_col(F.col(l_join_attr)).alias("_hl"),
@@ -160,7 +161,6 @@ def edit_distance_join(
         ltable.select(F.col(l_key_attr).alias("_l_key"), F.col(l_join_attr).alias("_l_str"))
         .where(F.col("_l_str").isNotNull())
     ).withColumn("_tokens", tok.spark_col(F.col("_l_str")))
-    is_self = ltable is rtable and l_key_attr == r_key_attr and l_join_attr == r_join_attr
     if is_self:
         # tokenize/order/rank once; alias for the right side (see set_sim_join)
         r_nn = l_nn.select(
@@ -192,39 +192,35 @@ def edit_distance_join(
             "_r_key", "_r_str", F.length("_r_str").alias("_r_len"), "_ranked", "_size"
         ).persist().transform(_tc)
 
-    # The join-attr STRING rides through the prefix explode so the verify can
-    # run inline in the join stage. Rationale (measured at sf0.1 local[32]):
-    # the old plan's `distinct()` on the raw join output (172M rows → 60M
-    # candidate pairs) plus TWO re-join shuffles to fetch the strings back
-    # was >90% of the query wall and stopped scaling (spill-bound hash agg).
-    # With the verify inline, the only post-join shuffle is the distinct over
-    # VERIFIED matches (~5-20× fewer rows), and the exchanges that do carry
-    # strings are the pre-join exploded prefixes (|prefix| = q·t+1 ≈ 5 rows
-    # per string — edit-distance join attrs are short title/name-class
-    # strings by construction, so this is thin). The threshold-bounded JVM
-    # levenshtein is O(len·t) with early exit, so evaluating it on joined
-    # rows BEFORE dedup costs a few ns per extra row — orders of magnitude
-    # cheaper than shuffling those rows.
-    pl = (
-        l_rk.withColumn("_pfx", fm.prefix_length_col(F.col("_size"), "edit_distance", t_int, q))
-        .select(
-            "_l_key", "_l_str", "_l_len", F.col("_size").alias("_l_size"),
-            F.posexplode(F.expr("slice(_ranked, 1, _pfx)")).alias("_l_pos", "_tok"),
+    # The join-attr STRING and the prefix array ride through the prefix
+    # explode so the first-shared-q-gram test and the verify run inline in
+    # the join stage, and no pair aggregate follows the token join (measured
+    # at sf0.1 local[32]: a `distinct()` on the raw join output, 172M rows →
+    # 60M candidate pairs, plus TWO re-join shuffles to fetch the strings
+    # back was >90% of the query wall and stopped scaling). The exchanges
+    # that carry strings are the pre-join exploded prefixes (|prefix| =
+    # q·t+1 ≈ 5 rows per string, each with ≤ q·t+1 ranks — edit-distance
+    # join attrs are short title/name-class strings by construction, so
+    # this is thin).
+    def prefix_explode(rk, side):
+        return (
+            rk.withColumn("_pfx", fm.prefix_length_col(F.col("_size"), "edit_distance", t_int, q))
+            .withColumn(f"_{side}_ranked", F.expr("slice(_ranked, 1, _pfx)"))
+            .select(
+                f"_{side}_key", f"_{side}_str", f"_{side}_len",
+                F.col("_size").alias(f"_{side}_size"), f"_{side}_ranked",
+                F.posexplode(f"_{side}_ranked").alias(f"_{side}_pos", "_tok"),
+            )
         )
-    )
-    pr = (
-        r_rk.withColumn("_pfx", fm.prefix_length_col(F.col("_size"), "edit_distance", t_int, q))
-        .select(
-            "_r_key", "_r_str", "_r_len", F.col("_size").alias("_r_size"),
-            F.posexplode(F.expr("slice(_ranked, 1, _pfx)")).alias("_r_pos", "_tok"),
-        )
-    )
+
+    pl, pr = prefix_explode(l_rk, "l"), prefix_explode(r_rk, "r")
     # positional q-gram count prune (Ed-Join count filtering; bound α =
     # max(n1,n2) − q·t from reference filter_utils.py:90-93): a true pair's
     # bag overlap is ≥ α, and at the min-rank shared token's first-occurrence
     # row (lp, rp) the total overlap is ≤ min(n_l − lp, n_r − rp) — so "the
-    # min-rank row passes ub ≥ α" ⟺ "some row passes", and filtering ALL
-    # rows before the verify never drops a true pair. Pure JVM arithmetic
+    # min-rank row passes ub ≥ α" ⟺ "some row passes", and that row is the
+    # one the first-shared-token test keeps: filtering ALL rows before the
+    # verify never drops a true pair. Pure JVM arithmetic
     # inside whole-stage codegen; shrinks the verify input drastically for
     # long strings (α grows with length, prefix stays q·t+1).
     ub = F.lit(1) + F.least(
@@ -280,14 +276,13 @@ def edit_distance_join(
         salted_token_join(pl, pr, hot, pin_partitions=pin_n)
         .where(F.abs(F.col("_l_len") - F.col("_r_len")) <= t_int)
         .where(ub >= alpha)
+        # one row per pair: the verify runs once per pair, no distinct follows
+        .where(fm.first_shared_prefix_token())
         .withColumn("_d", F.levenshtein(F.col("_l_str"), F.col("_r_str"), t_int))
         .where(keep)
         .withColumn("_sim_score", dd.cast("double"))
     )
-    # dedup the verified matches through a packed primitive key when the key
-    # dtypes allow it (plans/pairkey.py) — same spill math as set_sim_join
-    packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
-    pairs = distinct_pairs(verified, packer, "_sim_score")
+    pairs = verified.select("_l_key", "_r_key", "_sim_score")
 
     if allow_missing:
         pairs = pairs.unionByName(

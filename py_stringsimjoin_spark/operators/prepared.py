@@ -49,7 +49,6 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizers import Tokenizer
 from ..plans.cache import persist_tracked
-from ..plans.pairkey import distinct_pairs
 from ..plans.stats import sample_plan_stats
 from .set_sim_join import (
     _filter_and_verify,
@@ -188,23 +187,6 @@ class PreparedSetSimCorpus:
             F.col(self.join_attr).alias("_l_str"),
         )
         return sample_plan_stats([(proj, "_l_str")])
-
-    def resolve_packer(self):
-        """Pair-key packer for self-joins over this corpus, resolved ONCE.
-
-        For long-typed keys ``plans.pairkey.resolve_pair_packer`` costs a
-        column-pruned min/max job; its answer is a property of the corpus,
-        not of the threshold — so threshold sweeps over a prepared corpus
-        must not re-pay it per call.
-        """
-        if not hasattr(self, "_packer_resolved"):
-            from ..plans.pairkey import resolve_pair_packer
-
-            self._packer = resolve_pair_packer(
-                self.table, self.table, self.key_attr, self.key_attr, True
-            )
-            self._packer_resolved = True
-        return self._packer
 
     def join_pairs(
         self,
@@ -359,10 +341,13 @@ class PreparedSetSimCorpus:
         """The delta kernel: prefixes of ``ranked`` (``_rank_delta``) probe
         the corpus prefixes → ``(_l_key, _r_key, _sim_score)``.
 
-        It runs the prefix explode, size and position filters and inline
-        verify of ``set_sim_join_pairs`` (``_prefix_explode`` /
-        ``_filter_and_verify``); the corpus side is a slice of the stored
-        ranked arrays, pure column arithmetic. With ``internal=True`` the
+        It runs the prefix explode, size and position filters,
+        first-shared-token test and inline verify of ``set_sim_join_pairs``
+        (``_prefix_explode`` / ``_filter_and_verify``), so each pair comes
+        out once with no pair distinct; the corpus side is a slice of the
+        stored ranked arrays, pure column arithmetic. The stored and delta
+        arrays are sorted in one extended token order (``_new_ranks``), which
+        is all the first-shared-token test needs. With ``internal=True`` the
         right side is corpus ∪ delta, tagged ``_r_delta``, and the
         delta-internal pairs come out once each, ``_l_key < _r_key``.
 
@@ -379,7 +364,7 @@ class PreparedSetSimCorpus:
                     F.col("_l_ranked").alias("_r_ranked"),
                     F.col("_l_size").alias("_r_size"),
                 ),
-                "r", measure, threshold, carry_ranked=True,
+                "r", measure, threshold,
             )
 
         pr, pair_pred = right(self.ranked), None
@@ -388,8 +373,7 @@ class PreparedSetSimCorpus:
                 right(ranked).withColumn("_r_delta", F.lit(True))
             )
             pair_pred = ~F.col("_r_delta") | (F.col("_l_key") < F.col("_r_key"))
-        pl = _prefix_explode(ranked, "l", measure, threshold, carry_ranked=True)
-        joined = _filter_and_verify(
+        pl = _prefix_explode(ranked, "l", measure, threshold)
+        return _filter_and_verify(
             pl.join(pr, "_tok"), measure, threshold, comp_op, pair_pred=pair_pred
-        )
-        return distinct_pairs(joined, None, "_sim_score")
+        ).select("_l_key", "_r_key", "_sim_score")

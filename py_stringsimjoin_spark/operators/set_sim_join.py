@@ -11,16 +11,17 @@ re-architected as one declarative Spark plan:
     → hash equi-join on token rank                     [the "index"]
     → size-bound filter on (l_size, r_size)            [size filter]
     → per-joined-row positional overlap bound          [position filter]
+    → first-shared-prefix-token row only               [one row per pair]
     → inline JVM array_intersect exact verify          [zero UDF end-to-end]
-    → distinct over verified matches
     → empty-pair / missing-pair unions → output assembly
 
-Catalyst/AQE notes: the token equi-join is the only large shuffle; hot
-tokens are salted by their frequency in the prefix stream (plans/skew.py)
-and AQE skew join covers the rest. The position bound and the verify are
-plain column arithmetic (JVM, whole-stage codegen — no Python anywhere in
-the plan). Scores are float64, unrounded (the reference's default-Cython
-semantics, set_sim_join_cy.pyx:132).
+Catalyst/AQE notes: the token equi-join is the only large shuffle, and no
+pair aggregate follows it (each pair leaves it once); hot tokens are salted
+by their frequency in the prefix stream (plans/skew.py) and AQE skew join
+covers the rest. The position bound, the first-shared-token test and the
+verify are plain column arithmetic (JVM, whole-stage codegen — no Python
+anywhere in the plan). Scores are float64, unrounded (the reference's
+default-Cython semantics, set_sim_join_cy.pyx:132).
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.tokenizers import Tokenizer
 from ..plans import filter_math as fm
 from ..plans.output import assemble_output
-from ..plans.pairkey import distinct_pairs, resolve_pair_packer
 from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     COMP_OP_FN,
@@ -90,19 +90,19 @@ def _append_empty_and_missing(
 
 
 def _prefix_explode(
-    rk: DataFrame, side: str, measure: str, threshold: float, carry_ranked: bool
+    rk: DataFrame, side: str, measure: str, threshold: float
 ) -> DataFrame:
     """One row per prefix token of a ranked table
-    ``(_{side}_key, _{side}_ranked, _{side}_size)``: key, size, the token's
-    position ``_{side}_pos`` and rank ``_tok``; the ranked array rides along
-    for the inline verify when ``carry_ranked``."""
+    ``(_{side}_key, _{side}_ranked, _{side}_size)``: key, size, the ranked
+    array (for the first-shared-token test and the inline verify), the
+    token's position ``_{side}_pos`` and rank ``_tok``."""
     key, ranked, size = f"_{side}_key", f"_{side}_ranked", f"_{side}_size"
     return rk.withColumn(
         "_pfx", fm.prefix_length_col(F.col(size), measure, threshold)
     ).select(
         key,
         size,
-        *([ranked] if carry_ranked else []),
+        ranked,
         F.posexplode(F.expr(f"slice({ranked}, 1, _pfx)")).alias(f"_{side}_pos", "_tok"),
     )
 
@@ -117,9 +117,10 @@ def _filter_and_verify(
     pair_pred=None,
 ) -> DataFrame:
     """The filter stack over token-joined prefix rows: size bounds, an
-    optional pair predicate, the per-row position bound, and the inline
-    exact verify (adds ``_sim_score``). Rows stay one per shared prefix
-    token; the caller dedups pairs."""
+    optional pair predicate, the per-row position bound, the pair's
+    first shared prefix token (``fm.first_shared_prefix_token``) and the
+    inline exact verify (adds ``_sim_score``). Each pair leaves it at most
+    once."""
     joined = joined.where(
         (F.col("_r_size") >= fm.size_lower_bound_col(F.col("_l_size"), measure, threshold))
         & (F.col("_r_size") <= fm.size_upper_bound_col(F.col("_l_size"), measure, threshold))
@@ -127,14 +128,13 @@ def _filter_and_verify(
     if pair_pred is not None:
         joined = joined.where(pair_pred)
     if position_filter:
-        # positional overlap upper bound evaluated PER JOINED ROW, before any
-        # aggregation: for a shared token at positions (lp, rp),
-        # overlap ≤ count_so_far + min(remaining) and the min-rank shared
-        # token attains the MAXIMUM of this bound over a pair's rows — so
-        # "pair passes at its min-rank token" ⟺ "any row passes". Filtering
-        # rows first keeps the whole prune inside whole-stage codegen and
-        # shrinks the distinct() that follows by ~an order of magnitude
-        # (no groupBy over the full joined stream at all).
+        # positional overlap upper bound evaluated PER JOINED ROW: for a
+        # shared token at positions (lp, rp), overlap ≤ count_so_far +
+        # min(remaining) and the min-rank shared token attains the MAXIMUM
+        # of this bound over a pair's rows — so "pair passes at its min-rank
+        # token" ⟺ "any row passes", and the first-shared-token row below
+        # survives whenever the pair does. Pure column arithmetic inside
+        # whole-stage codegen.
         ub = F.lit(1) + F.least(
             F.col("_l_size") - F.col("_l_pos") - 1,
             F.col("_r_size") - F.col("_r_pos") - 1,
@@ -144,6 +144,9 @@ def _filter_and_verify(
                 F.col("_l_size"), F.col("_r_size"), measure, threshold
             )
         )
+    # one row per pair from here on: the verify runs once per pair, and no
+    # pair distinct follows
+    joined = joined.where(fm.first_shared_prefix_token())
     if verify:
         # exact verify in pure JVM: the ranked arrays are duplicate-free
         # ints, so array_intersect size IS the set overlap; the score
@@ -211,10 +214,10 @@ def set_sim_join_pairs(
     explicit ``repartition(n)`` so AQE cannot re-coalesce the expansion.
 
     ``self_join_dedup=True`` (self-join deduplication for clustering
-    pipelines) keeps only _l_key < _r_key pairs, applied *before* the
-    pair distinct so its shuffle halves. ``verify=False`` stops after the
-    filter stack and returns candidate pairs without scores (blocking
-    mode; _sim_score column absent).
+    pipelines) keeps only _l_key < _r_key pairs, applied to the joined rows
+    before the verify. ``verify=False`` stops after the filter stack and
+    returns candidate pairs without scores (blocking mode; _sim_score
+    column absent).
 
     ``value_dedup``: the kernel's one cost-based decision — dup-heavy corpora
     (re-crawled pages, repeated product names) make the row-level join
@@ -296,7 +299,11 @@ def set_sim_join_pairs(
             value_hash_col(F.col("_l_key")).alias("_h1"),
             value_hash_col(F.col("_r_key")).alias("_h2"),
             *([F.col("_sim_score")] if verify else []),
-        )
+        # materialize the value pairs: fused into one codegen stage with the
+        # expansion joins, the score (the verify) is evaluated lazily inside
+        # each join's match loop — once per EXPANDED row, not per value pair
+        # (measured: a 23M-row cosine sweep call 1 s → 6 s)
+        ).repartition("_h1")
         l_hm = l_proj.where(F.col("_l_str").isNotNull()).select(
             "_l_key", value_hash_col(F.col("_l_str")).alias("_hl")
         )
@@ -388,25 +395,11 @@ def set_sim_join_pairs(
                 ).select(F.explode(F.expr("slice(_r_ranked, 1, _pfx)")).alias("_tok"))
             )
         hot = exploded_hot_token_ranks(probe, n_salts)
-    # The plan ends in a hash aggregation keyed by the candidate pair (the
-    # distinct over matches) — the spill-dominant stage on dup-heavy
-    # corpora. When both keys provably fit in 32 bits the pair is packed
-    # into ONE primitive long through that aggregation (plans/pairkey.py;
-    # round-3 event logs measured the two-column grouping key spilling
-    # 4-8× its exchange bytes).
-    # prepared corpora cache the packer decision (its bounds job is a corpus
-    # property — a threshold sweep must not re-pay the scan per call)
-    if _prepared is not None:
-        packer = _prepared.resolve_packer()
-    else:
-        packer = resolve_pair_packer(ltable, rtable, l_key_attr, r_key_attr, is_self)
-
-    # the ranked arrays ride through the prefix explode so the exact verify
-    # runs INLINE in the join stage: the only post-join shuffle is the
-    # distinct over VERIFIED matches, never the raw candidate stream (3-10×
-    # larger on dense / dup-heavy corpora)
-    pl = _prefix_explode(l_rk, "l", measure, threshold, carry_ranked=verify)
-    pr = _prefix_explode(r_rk, "r", measure, threshold, carry_ranked=verify)
+    # the ranked arrays ride through the prefix explode so the first-shared-
+    # token test and the exact verify run INLINE in the join stage: each
+    # pair leaves it once, so no pair aggregate follows the token join
+    pl = _prefix_explode(l_rk, "l", measure, threshold)
+    pr = _prefix_explode(r_rk, "r", measure, threshold)
     joined = _filter_and_verify(
         salted_token_join(
             pl, pr, hot, pin_partitions=None if tiny_join else n_shuffle
@@ -416,9 +409,7 @@ def set_sim_join_pairs(
         verify=verify,
         pair_pred=(F.col("_l_key") < F.col("_r_key")) if self_join_dedup else None,
     )
-    # duplicates (one per shared prefix token that survived the filters)
-    # carry identical scores; dedup the (verified) pairs
-    pairs = distinct_pairs(joined, packer, *(["_sim_score"] if verify else []))
+    pairs = joined.select("_l_key", "_r_key", *(["_sim_score"] if verify else []))
     return _append_empty_and_missing(
         pairs, measure, comp_op, threshold, allow_empty, allow_missing,
         l_rk, r_rk, ltable, rtable, l_key_attr, r_key_attr,

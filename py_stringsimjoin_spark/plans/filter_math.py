@@ -160,3 +160,25 @@ def overlap_threshold_col(l_num: Column, r_num: Column, measure: str, threshold:
     if measure == "overlap":
         return F.lit(t)
     raise ValueError(measure)
+
+
+def first_shared_prefix_token() -> Column:
+    """True on exactly one token-joined row per candidate pair: the row of
+    the pair's first shared token.
+
+    Prefix-filter kernels join one row per shared prefix token, carrying
+    ``_l_ranked``/``_r_ranked`` (ascending ranks, or at least their prefix)
+    and the token's 0-based positions ``_l_pos``/``_r_pos``. Under one fixed
+    token order the pair's minimum-rank shared token lies inside both
+    prefixes whenever any shared token does (AllPairs/PPJoin), so keeping
+    only its row emits each pair once — no pair distinct. Both slices are
+    extended by the token itself, so for bags (edit-distance q-grams) the
+    row must also be the token's first occurrence on each side. Size and
+    position bounds are largest at this row, so every per-pair filter
+    applied before or after keeps or drops the pair as it would on any of
+    its rows.
+    """
+    return F.expr(
+        "NOT arrays_overlap(slice(_l_ranked, 1, _l_pos), slice(_r_ranked, 1, _r_pos + 1))"
+        " AND NOT arrays_overlap(slice(_l_ranked, 1, _l_pos + 1), slice(_r_ranked, 1, _r_pos))"
+    )

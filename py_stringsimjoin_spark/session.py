@@ -101,13 +101,6 @@ def get_spark(
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
-    # MIN/MAX/COUNT aggregates over a bare parquet scan are answered from
-    # row-group footer statistics instead of scanning rows (Spark 3.3+).
-    # The pair-packer bounds job (plans/pairkey.py) is exactly that shape —
-    # at production scale it turns a full key-column scan into a metadata
-    # read. Parquet writers always produce these stats, so this is safe at
-    # any scale; pushdown silently no-ops for plans it cannot serve.
-    builder = builder.config("spark.sql.parquet.aggregatePushdown", "true")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -75,6 +75,30 @@ def brute_force_set_sim(
     return out
 
 
+def brute_force_containment(
+    a_rows, b_rows, l_key_i, r_key_i, l_join_i, r_join_i,
+    tokenizer, threshold, comp_op=">=", exclude_self_pairs=False,
+) -> dict:
+    """|l ∩ r| / |l| over non-NULL pairs, allow_empty=False: an empty left
+    set pairs with nothing."""
+    out = {}
+    for la in a_rows:
+        if la[l_join_i] is None:
+            continue
+        lt = tokenizer.tokenize(la[l_join_i])
+        if not lt:
+            continue
+        for rb in b_rows:
+            if rb[r_join_i] is None:
+                continue
+            if exclude_self_pairs and la[l_key_i] == rb[r_key_i]:
+                continue
+            s = sim_on_sets("containment", lt, tokenizer.tokenize(rb[r_join_i]))
+            if apply_comp(comp_op, s, threshold):
+                out[(la[l_key_i], rb[r_key_i])] = s
+    return out
+
+
 def brute_force_edit_distance(
     a_rows, b_rows, l_key_i, r_key_i, l_join_i, r_join_i,
     tokenizer, threshold, comp_op="<=",

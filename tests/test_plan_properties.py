@@ -9,6 +9,8 @@ join multiplies IO 4x at 100 TB).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -221,3 +223,49 @@ def test_textclean_plans_are_python_free(spark):
     # boilerplate segments collapse before the shuffle)
     plan = _plan(dedup_spans(docs, span_words=5))
     assert "partial_count" in plan or "partial count" in plan.lower()
+
+
+_AGG_KEYS = re.compile(r"Aggregate\(keys=\[([^\]]*)\]")
+
+
+def _pair_aggregates(df) -> list[str]:
+    """Key lists of physical aggregates grouped on the candidate pair: both
+    ``_l_key`` and ``_r_key``, or a packed ``_pk``."""
+    found = []
+    for keys in _AGG_KEYS.findall(_plan(df)):
+        names = {k.strip().split("#")[0] for k in keys.split(",")}
+        if {"_l_key", "_r_key"} <= names or "_pk" in names:
+            found.append(keys)
+    return found
+
+
+def test_prefix_kernels_emit_pairs_without_pair_aggregate(spark, part):
+    """Every prefix-filter kernel keeps a joined row only at the pair's
+    first shared prefix token, so no plan may dedup pairs with an
+    aggregate after the token join."""
+    from py_stringsimjoin_spark import PreparedSetSimCorpus, containment_join
+
+    ws = WhitespaceTokenizer()
+    names = part.select("p_partkey", "p_name")
+    corpus = PreparedSetSimCorpus(names, "p_partkey", "p_name", ws)
+    delta = names.limit(20).select(
+        (F.col("p_partkey") + 1_000_000).alias("p_partkey"), "p_name"
+    )
+    plans = {
+        "jaccard_join": jaccard_join(
+            part, part, "p_partkey", "p_partkey", "p_name", "p_name", ws, 0.5,
+        ),
+        "blocking": corpus.join_pairs(
+            "jaccard", 0.5, verify=False, self_join_dedup=True
+        ),
+        "join_delta_pairs": corpus.join_delta_pairs(delta, "jaccard", 0.5),
+        "containment_join": containment_join(
+            part, part, "p_partkey", "p_partkey", "p_name", "p_name", ws, 0.5,
+        ),
+        "edit_distance_join": edit_distance_join(
+            part, part, "p_partkey", "p_partkey", "p_name", "p_name", 2,
+            tokenizer=QgramTokenizer(qval=2), value_dedup=False,
+        ),
+    }
+    for name, df in plans.items():
+        assert _pair_aggregates(df) == [], f"pair aggregate in {name} plan"

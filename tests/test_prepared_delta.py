@@ -114,10 +114,9 @@ def test_delta_join_randomized_vs_brute_force(spark, seed, measure, threshold):
     delta_df = spark.createDataFrame(delta_rows, ["id", "name"])
     corpus = PreparedSetSimCorpus(corpus_df, "id", "name", WS)
 
-    got = {
-        (r["_l_key"], r["_r_key"]): r["_sim_score"]
-        for r in corpus.join_delta_pairs(delta_df, measure, threshold).collect()
-    }
+    rows = corpus.join_delta_pairs(delta_df, measure, threshold).collect()
+    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(got), "duplicate delta pairs"
     want = {}
     for li, ln in delta_rows:
         lt = WS.tokenize(ln)
@@ -156,15 +155,13 @@ DELTA_INTERNAL = DELTA + [
 
 def _fold(corpus, delta_df, measure, threshold):
     """Join one increment through the delta kernel and fold it into the
-    store, as ``LinkagePipeline.increment`` does → (pairs, folded corpus)."""
+    store, as ``LinkagePipeline.increment`` does → (pairs, folded corpus).
+    The kernel has no pair distinct, so each pair must come out once."""
     new_ranks = corpus._new_ranks(delta_df)
     ranked = corpus._rank_delta(delta_df, new_ranks)
-    pairs = {
-        (r["_l_key"], r["_r_key"]): r["_sim_score"]
-        for r in corpus._delta_pairs(
-            ranked, measure, threshold, internal=True
-        ).collect()
-    }
+    rows = corpus._delta_pairs(ranked, measure, threshold, internal=True).collect()
+    pairs = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(pairs), "duplicate delta pairs"
     folded = PreparedSetSimCorpus._of(
         corpus.table.unionByName(delta_df),
         "id", "name", WS,

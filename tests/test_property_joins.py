@@ -1,12 +1,14 @@
 """Property-based oracle tests: random corpora × random thresholds must match
 the brute-force oracle on every branch of the kernels' plan-time choices
 (hypothesis drives the data; one Spark job per example keeps runtime
-bounded).
+bounded). Every test also checks that each pair comes out once: the
+kernels emit a pair at its first shared prefix token only, with no pair
+distinct behind them.
 
-``_join_rows_hint`` forces the set-sim kernel's tiny-join gate on the
-row-level join: 1 takes the gated plan (no hot-token probe, no exchange
-pinning), 10**9 the probed, salted and pinned plan. (A value-dedup join
-passes its own distinct-value count to the inner join instead.)"""
+``_join_rows_hint`` forces the set-sim and edit-distance kernels' tiny-join
+gate on the row-level join: 1 takes the gated plan (no hot-token probe, no
+exchange pinning), 10**9 the probed, salted and pinned plan. (A value-dedup
+join passes its own distinct-value count to the inner join instead.)"""
 
 import random
 
@@ -52,7 +54,9 @@ def test_random_corpus_matches_oracle(spark, seed, threshold, measure, rows_hint
         WhitespaceTokenizer(), threshold, value_dedup=value_dedup,
         _join_rows_hint=rows_hint,
     )
-    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in out.collect()}
+    rows = out.collect()
+    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(got), "duplicate pairs"
     exp = brute_force_set_sim(
         rows_a, rows_b, 0, 0, 1, 1, WhitespaceTokenizer(), measure, threshold
     )
@@ -82,9 +86,12 @@ def _mk_str_rows(seed: int, n: int):
     seed=st.integers(0, 10_000),
     threshold=st.sampled_from([0, 1, 2, 3]),
     comp_op=st.sampled_from(["<=", "<", "="]),
+    rows_hint=st.sampled_from([1, 10**9]),
     value_dedup=st.sampled_from([False, "auto"]),
 )
-def test_random_edit_distance_matches_oracle(spark, seed, threshold, comp_op, value_dedup):
+def test_random_edit_distance_matches_oracle(
+    spark, seed, threshold, comp_op, rows_hint, value_dedup
+):
     from py_stringsimjoin_spark.functions.tokenizers import QgramTokenizer
     from py_stringsimjoin_spark.operators.edit_distance_join import edit_distance_join
 
@@ -97,11 +104,11 @@ def test_random_edit_distance_matches_oracle(spark, seed, threshold, comp_op, va
     tok = QgramTokenizer(qval=2)
     out = edit_distance_join(
         A, B, "ID", "ID", "name", "name", threshold, comp_op=comp_op,
-        tokenizer=tok, value_dedup=value_dedup,
+        tokenizer=tok, value_dedup=value_dedup, _join_rows_hint=rows_hint,
     )
-    got = {
-        (r["l_ID"], r["r_ID"]): r["_sim_score"] for r in out.collect()
-    }
+    rows = out.collect()
+    got = {(r["l_ID"], r["r_ID"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(got), "duplicate pairs"
     # bag tokenizer for the shared-qgram carve-out, like the join itself
     from py_stringsimjoin_spark.operators.edit_distance_join import _as_bag
 
@@ -109,11 +116,53 @@ def test_random_edit_distance_matches_oracle(spark, seed, threshold, comp_op, va
         rows_a, rows_b, 0, 0, 1, 1, _as_bag(tok), threshold, comp_op
     )
     assert set(got) == set(exp), (
-        f"t={threshold} {comp_op} dedup={value_dedup}: "
+        f"t={threshold} {comp_op} hint={rows_hint} dedup={value_dedup}: "
         f"extra={set(got) - set(exp)} missing={set(exp) - set(got)}"
     )
     for k, v in exp.items():
         assert got[k] == v
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    seed=st.integers(0, 10_000),
+    threshold=st.sampled_from([0.25, 0.5, 0.75, 1.0]),
+    self_join=st.booleans(),
+    exclude_self_pairs=st.booleans(),
+)
+def test_random_containment_matches_oracle(
+    spark, seed, threshold, self_join, exclude_self_pairs
+):
+    """Containment (left prefix, full right explode) against brute force,
+    as a self-join and over two tables whose keys overlap, with and
+    without ``exclude_self_pairs``."""
+    from py_stringsimjoin_spark.operators.containment_join import (
+        containment_join_pairs,
+    )
+
+    from .oracle import brute_force_containment
+
+    rows_a = _mk_rows(seed, 12)
+    rows_b = rows_a if self_join else _mk_rows(seed + 1, 12)
+    A = spark.createDataFrame(rows_a, "ID string, name string")
+    B = A if self_join else spark.createDataFrame(rows_b, "ID string, name string")
+    out = containment_join_pairs(
+        A, B, "ID", "ID", "name", "name", WhitespaceTokenizer(), threshold,
+        exclude_self_pairs=exclude_self_pairs,
+    )
+    rows = out.collect()
+    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(got), "duplicate pairs"
+    exp = brute_force_containment(
+        rows_a, rows_b, 0, 0, 1, 1, WhitespaceTokenizer(), threshold,
+        exclude_self_pairs=exclude_self_pairs,
+    )
+    assert set(got) == set(exp), (
+        f"t={threshold} self={self_join} exclude={exclude_self_pairs}: "
+        f"extra={set(got) - set(exp)} missing={set(exp) - set(got)}"
+    )
+    for k, v in exp.items():
+        assert got[k] == pytest.approx(v, abs=1e-9)
 
 
 def _brute_missing_pairs(rows_a, rows_b, l_key_i, r_key_i, l_join_i, r_join_i):
@@ -158,7 +207,9 @@ def test_comp_op_allow_missing_grid(
         allow_missing=allow_missing, value_dedup=False,
         _join_rows_hint=rows_hint,
     )
-    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in out.collect()}
+    rows = out.collect()
+    got = {(r["_l_key"], r["_r_key"]): r["_sim_score"] for r in rows}
+    assert len(rows) == len(got), "duplicate pairs"
     exp = brute_force_set_sim(
         rows_a, rows_b, 0, 0, 1, 1, WhitespaceTokenizer(), measure, threshold,
         comp_op=comp_op,

@@ -1,89 +1,25 @@
-"""Round-4 features: pair-key packing, bounded-sample plan stats, sampled
-hot-token salting."""
+"""Round-4 features: key-dtype output invariance, bounded-sample plan
+stats, sampled hot-token salting, prepared corpora."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
 
 from py_stringsimjoin_spark.functions.tokenizers import WhitespaceTokenizer
-from py_stringsimjoin_spark.plans.pairkey import PairPacker, resolve_pair_packer
 from py_stringsimjoin_spark.plans.stats import sample_plan_stats
 
 _WS = WhitespaceTokenizer(return_set=True)
 
-I32_MAX = (1 << 31) - 1
-I32_MIN = -(1 << 31)
-
-
-def test_pair_packer_roundtrip(spark):
-    cases = [
-        (0, 0),
-        (1, 2),
-        (-1, 3),
-        (5, -3),
-        (-7, -9),
-        (I32_MAX, I32_MIN),
-        (I32_MIN, I32_MAX),
-        (I32_MAX, I32_MAX),
-        (I32_MIN, I32_MIN),
-    ]
-    df = spark.createDataFrame(cases, "l long, r long")
-    p = PairPacker(LongType(), LongType())
-    out = df.select(
-        "l",
-        "r",
-        p.unpack_l(p.pack(F.col("l"), F.col("r"))).alias("ul"),
-        p.unpack_r(p.pack(F.col("l"), F.col("r"))).alias("ur"),
-    ).collect()
-    for row in out:
-        assert (row["ul"], row["ur"]) == (row["l"], row["r"]), row
-    # packing is injective over the case set
-    packed = df.select(p.pack(F.col("l"), F.col("r")).alias("pk")).collect()
-    assert len({r["pk"] for r in packed}) == len(cases)
-
-
-def test_pair_packer_int_types(spark):
-    df = spark.createDataFrame([(7, -8)], "l int, r int")
-    p = PairPacker(IntegerType(), IntegerType())
-    row = df.select(
-        p.unpack_l(p.pack(F.col("l"), F.col("r"))).alias("ul"),
-        p.unpack_r(p.pack(F.col("l"), F.col("r"))).alias("ur"),
-    ).first()
-    assert (row["ul"], row["ur"]) == (7, -8)
-    assert row.__fields__ and df.select(
-        p.pack(F.col("l"), F.col("r"))
-    ).schema[0].dataType == LongType()
-
-
-def test_resolve_pair_packer(spark):
-    ok = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    assert resolve_pair_packer(ok, ok, "k", "k", True) is not None
-    # long keys out of i32 range -> refuse
-    big = spark.createDataFrame([(1 << 40, "a")], "k long, v string")
-    assert resolve_pair_packer(big, big, "k", "k", True) is None
-    # either side out of range -> refuse (non-self path)
-    assert resolve_pair_packer(ok, big, "k", "k", False) is None
-    # NULL keys would collapse pairs -> refuse
-    nullk = spark.createDataFrame([(None, "a"), (2, "b")], "k long, v string")
-    assert resolve_pair_packer(nullk, nullk, "k", "k", True) is None
-    # non-integral keys -> refuse without any job
-    s = spark.createDataFrame([("x", "a")], "k string, v string")
-    assert resolve_pair_packer(s, s, "k", "k", True) is None
-    # int keys are statically safe (no bounds job)
-    ints = spark.createDataFrame([(1, "a")], "k int, v string")
-    assert resolve_pair_packer(ints, ints, "k", "k", True) is not None
-
 
 def _string_keyed(df):
-    """The same table with its long ``id`` cast to string: never packed."""
+    """The same table with its long ``id`` cast to string."""
     return df.withColumn("id", F.col("id").cast("string"))
 
 
-def test_packing_output_invariant(spark):
-    """Long keys (packed) and the same keys as strings (never packed) give
-    the same pairs and scores."""
+def test_key_dtype_output_invariant(spark):
+    """Long keys and the same keys as strings give the same pairs and
+    scores."""
     from py_stringsimjoin_spark.operators.set_sim_join import set_sim_join_pairs
 
     rows = [
@@ -92,10 +28,7 @@ def test_packing_output_invariant(spark):
             [(x, y) for x in "abcdef" for y in "abcdef"] * 3
         )
     ]
-    packed = spark.createDataFrame(rows, "id long, s string")
-    unpacked = _string_keyed(packed)
-    assert resolve_pair_packer(packed, packed, "id", "id", True) is not None
-    assert resolve_pair_packer(unpacked, unpacked, "id", "id", True) is None
+    long_keyed = spark.createDataFrame(rows, "id long, s string")
 
     def run(table):
         out = set_sim_join_pairs(
@@ -107,13 +40,12 @@ def test_packing_output_invariant(spark):
             for r in out.collect()
         )
 
-    on = run(packed)
-    assert on == run(unpacked) and len(on) > 0
+    on = run(long_keyed)
+    assert on == run(_string_keyed(long_keyed)) and len(on) > 0
 
 
-def test_edit_distance_packing_invariant(spark, person_tables):
-    """Edit-distance join: long keys (packed) vs the same keys as strings
-    (never packed)."""
+def test_edit_distance_key_dtype_invariant(spark, person_tables):
+    """Edit-distance join: long keys vs the same keys as strings."""
     from py_stringsimjoin_spark.operators.edit_distance_join import (
         edit_distance_join,
     )
@@ -122,7 +54,6 @@ def test_edit_distance_packing_invariant(spark, person_tables):
     # a1..a7 -> 1..7, b1..b8 -> 101..108
     la = A.select(F.substring("ID", 2, 9).cast("long").alias("id"), "name")
     lb = B.select((F.substring("ID", 2, 9).cast("long") + 100).alias("id"), "name")
-    assert resolve_pair_packer(la, lb, "id", "id", False) is not None
 
     def run(a, b):
         out = edit_distance_join(
@@ -214,8 +145,6 @@ def test_prepared_corpus_matches_direct(spark, tmp_path):
     # rebuild) and reproduce the direct join exactly
     corpus3 = PreparedSetSimCorpus.load(tbl, "id", "s", _WS, p)
     assert _pairs_set(corpus3.join_pairs("jaccard", 0.5, self_join_dedup=True)) == _pairs_set(direct)
-    # the packer decision is resolved once and memoized across the sweep
-    assert corpus3.resolve_packer() is corpus3.resolve_packer()
 
 
 def test_prepared_corpus_bucketed(spark, tmp_path):
