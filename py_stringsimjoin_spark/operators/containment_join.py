@@ -52,6 +52,7 @@ from ..plans.cache import tracked_cache as _tc
 from ..plans.output import assemble_output
 from ..plans.validation import (
     COMP_OP_FN,
+    comp_col,
     validate_attr,
     validate_attr_type,
     validate_comp_op,
@@ -59,7 +60,7 @@ from ..plans.validation import (
     validate_tokenizer,
 )
 from .missing_pairs import missing_pairs
-from .set_sim_join import _COMP_COL_FN, as_set_tokenizer
+from .set_sim_join import as_set_tokenizer
 from .token_ordering import add_ranked_tokens, build_token_ordering
 from ..plans.skew import (
     exploded_hot_token_ranks,
@@ -208,11 +209,10 @@ def containment_join_pairs(
 
     # one row per pair: the verify runs once per pair
     joined = joined.where(fm.first_shared_prefix_token())
-    ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
-    ls = F.size("_l_ranked").cast("double")
+    ov, ls, _ = fm.overlap_and_sizes("_l_ranked", "_r_ranked")
     pairs = (
         joined.withColumn("_sim_score", ov / ls)
-        .where(_COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(float(threshold))))
+        .where(comp_col(comp_op, F.col("_sim_score"), float(threshold)))
         .select("_l_key", "_r_key", "_sim_score")
     )
 

@@ -66,34 +66,11 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_perm_cols(tokens_col, num_perm: int = 64) -> list["F.Column"]:
-    """One long Column per permutation (min over permuted token hashes) from
-    an array<string> token column — pure Spark expressions. Per-ROW form:
-    valid where aggregations are not (Structured Streaming micro-batches);
-    batch plans use the flat explode+agg form in ``minhash_lsh_pairs``,
-    which computes the same values faster at scale."""
-    th = F.transform(tokens_col, _token_hash_col)
-
-    def _perm_fn(a, b):
-        # factory, NOT default-arg lambda: PySpark counts lambda params
-        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_MERSENNE)
-
-    return [
-        F.array_min(F.transform(th, _perm_fn(a, b)))
-        for a, b in minhash_perm_params(num_perm)
-    ]
-
-
-def minhash_signature_col(tokens_col, num_perm: int = 64) -> "F.Column":
-    """array<long> MinHash signature from an array<string> token column."""
-    return F.array(*minhash_perm_cols(tokens_col, num_perm))
-
-
 def band_bucket_exprs(sig_cols: list["F.Column"], bands: int) -> list["F.Column"]:
     """One md5 bucket Column per LSH band from ``num_perm`` per-permutation
     signature Columns. The SINGLE definition of the band-bucket hash — the
-    batch self-join and the streaming stream-static probe both call it, so a
-    stream row lands in exactly the bucket its batch twin would."""
+    batch self-join, the curation increment and the containment LSH plan
+    all call it, so a row lands in the same bucket in each."""
     if len(sig_cols) % bands:
         raise ValueError("num_perm must be divisible by bands")
     rpb = len(sig_cols) // bands
@@ -121,12 +98,11 @@ def minhash_band_rows(
     the near-dup join. A row collides with another iff they share a
     (_band, _bucket); CurationPipeline.increment persists this table so a
     crawl delta probes EXISTING buckets instead of re-signing the corpus
-    (same single-definition band hash the streaming probe uses)."""
+    (the single-definition band hash, ``band_bucket_exprs``)."""
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     tok = tokenizer or ShingleTokenizer(n=3)
-    # flat signature plan (same values as minhash_signature_col): explode
-    # tokens once, hash once per row, then ONE hash-aggregate with num_perm
+    # flat signature plan: explode tokens once, hash once per row, then ONE hash-aggregate with num_perm
     # codegen'd MIN columns — the array-expression form evaluates the
     # permutations interpreted per element and scales poorly
     from ..plans.layout import widen_small_scan

@@ -163,11 +163,6 @@ def edit_distance_join(
     ).withColumn("_tokens", tok.spark_col(F.col("_l_str")))
     if is_self:
         # tokenize/order/rank once; alias for the right side (see set_sim_join)
-        r_nn = l_nn.select(
-            F.col("_l_key").alias("_r_key"),
-            F.col("_l_str").alias("_r_str"),
-            "_tokens",
-        )
         ordering = build_token_ordering([(l_nn, "_tokens")]).persist().transform(_tc)
         l_rk = add_ranked_tokens(l_nn, ["_l_key"], "_tokens", ordering, "_ranked", "_size").select(
             "_l_key", "_l_str", F.length("_l_str").alias("_l_len"), "_ranked", "_size"

@@ -34,6 +34,7 @@ from ..plans import filter_math as fm
 from ..plans.output import assemble_output
 from ..plans.validation import (
     COMP_OP_FN,
+    comp_col,
     validate_attr,
     validate_attr_type,
     validate_comp_op,
@@ -178,7 +179,7 @@ class OverlapFilter(_BaseFilter):
         return not COMP_OP_FN[self.comp_op](len(lt & rt), self.overlap_size)
 
     def _pairs(self, ltable, rtable, l_key, r_key, l_join, r_join):
-        from .overlap_join import _token_pairs, comp_col
+        from .overlap_join import _token_pairs
 
         tok = as_set_tokenizer(self.tokenizer)
         _, _, joined = _token_pairs(ltable, rtable, l_key, r_key, l_join, r_join, tok, False)

@@ -43,9 +43,54 @@ from ..functions.sims import (
     batch_tversky,
 )
 from ..functions.tokenizers import Tokenizer
-from ..plans.validation import COMP_OP_NUMPY, validate_attr, validate_attr_type, validate_comp_op
+from ..plans import filter_math as fm
+from ..plans.validation import (
+    COMP_OP_NUMPY,
+    comp_col,
+    validate_attr,
+    validate_attr_type,
+    validate_comp_op,
+)
 
 _MEASURES = ("jaccard", "cosine", "dice", "overlap", "overlap_coefficient")
+
+
+def score_pairs(
+    candset: DataFrame,
+    candset_l_key_attr: str,
+    candset_r_key_attr: str,
+    l_sets: DataFrame,
+    r_sets: DataFrame,
+    score,
+    threshold: float,
+    comp_op: str = ">=",
+) -> DataFrame:
+    """Join each candidate pair to its two sets and score it, in pure JVM.
+
+    ``l_sets`` / ``r_sets`` are two-column ``(key, set)`` tables holding one
+    duplicate-free array per key: tokenized text (``verify_pairs``) or the
+    blocking stage's ranked int arrays (``LinkagePipeline.scoring``).
+    ``score(ov, ls, rs)`` builds the score Column from the overlap and the
+    two sizes (``filter_math.overlap_and_sizes``). Returns ALL candset
+    columns + ``_sim_score`` for pairs passing ``comp_op threshold``.
+    """
+    cand_cols = candset.columns
+    l_sets = l_sets.toDF("__lk", "__lt")
+    r_sets = r_sets.toDF("__rk", "__rt")
+    # shuffle-hash hints: the set side must never be sort-merged (no point
+    # sorting array columns) nor must the candset side ever be broadcast —
+    # local-mode AQE occasionally picks a pathological build side otherwise
+    joined = (
+        candset
+        .join(l_sets.hint("shuffle_hash"), candset[candset_l_key_attr] == l_sets["__lk"])
+        .join(r_sets.hint("shuffle_hash"), candset[candset_r_key_attr] == r_sets["__rk"])
+        .select(*[F.col(c) for c in cand_cols], "__lt", "__rt")
+    )
+    return (
+        joined.withColumn("_sim_score", score(*fm.overlap_and_sizes("__lt", "__rt")))
+        .where(comp_col(comp_op, F.col("_sim_score"), float(threshold)))
+        .select(*cand_cols, "_sim_score")
+    )
 
 
 def verify_pairs(
@@ -64,75 +109,54 @@ def verify_pairs(
     comp_op: str = ">=",
     measure_args: dict | None = None,
 ) -> DataFrame:
-    """Fast candidate-pair verifier: the pipeline's scoring stage.
+    """Fast candidate-pair verifier over tokenized text.
 
     Unlike ``apply_matcher`` (which supports arbitrary Python sim functions
     and therefore tokenizes per value in Python), this path keeps EVERYTHING
     in Spark expressions: tokenization, array_intersect overlap, and the
     score arithmetic all run in whole-stage codegen — zero Python workers.
+    Its join-and-score body is ``score_pairs``, which the linkage
+    pipeline's scoring stage runs over blocking's ranked arrays instead.
 
     Returns ALL candset columns (``_id``-style passthroughs included) +
     ``_sim_score`` for pairs passing ``comp_op threshold``.
     """
-    from .overlap_join import comp_col
     from .set_sim_join import as_set_tokenizer
 
     validate_comp_op(comp_op, (">=", ">", "<=", "<", "=", "!="))
     tok = as_set_tokenizer(tokenizer)
-    cand_cols = candset.columns
     empty_arr = F.array().cast("array<string>")
     l_tok = ltable.select(
-        F.col(l_key_attr).alias("__lk"),
-        F.coalesce(tok.spark_col(F.col(l_match_attr)), empty_arr).alias("__lt"),
+        l_key_attr, F.coalesce(tok.spark_col(F.col(l_match_attr)), empty_arr)
     )
     r_tok = rtable.select(
-        F.col(r_key_attr).alias("__rk"),
-        F.coalesce(tok.spark_col(F.col(r_match_attr)), empty_arr).alias("__rt"),
+        r_key_attr, F.coalesce(tok.spark_col(F.col(r_match_attr)), empty_arr)
     )
-    # shuffle-hash hints: the token side must never be sort-merged (no point
-    # sorting array columns) nor must the candset side ever be broadcast —
-    # local-mode AQE occasionally picks a pathological build side otherwise
-    joined = (
-        candset
-        .join(l_tok.hint("shuffle_hash"), candset[candset_l_key_attr] == l_tok["__lk"])
-        .join(r_tok.hint("shuffle_hash"), candset[candset_r_key_attr] == r_tok["__rk"])
-        .select(*[F.col(c) for c in cand_cols], "__lt", "__rt")
-    )
-    # exact scoring in pure JVM: token arrays are sets (as_set_tokenizer), so
-    # array_intersect size is the overlap; empty/NULL semantics mirror
-    # functions/sims.score_from_overlap (both-empty → 1.0 where defined,
-    # any-empty → 0.0, overlap measure keeps the raw count). No Python stage:
-    # the previous Arrow+factorize kernel spent most of its wall serializing
-    # token arrays to workers.
-    ov = F.size(F.array_intersect("__lt", "__rt")).cast("double")
-    ls = F.size("__lt").cast("double")
-    rs = F.size("__rt").cast("double")
-    if measure == "jaccard":
-        score = ov / (ls + rs - ov)
-    elif measure == "cosine":
-        score = ov / F.sqrt(ls * rs)
-    elif measure == "dice":
-        score = F.lit(2.0) * ov / (ls + rs)
-    elif measure == "overlap":
-        score = ov
-    elif measure == "overlap_coefficient":
-        score = ov / F.least(ls, rs)
-    elif measure == "tversky_index":
-        alpha = float((measure_args or {}).get("alpha", 0.5))
-        beta = float((measure_args or {}).get("beta", 0.5))
-        score = ov / (ov + F.lit(alpha) * (ls - ov) + F.lit(beta) * (rs - ov))
-    else:
-        raise ValueError(f"unknown measure {measure!r}")
-    if measure != "overlap":
-        score = (
+
+    # token arrays are sets (as_set_tokenizer), so the set-sim measures
+    # share the prefix kernels' score expression; empty/NULL semantics
+    # mirror functions/sims.score_from_overlap (both-empty → 1.0 where
+    # defined, any-empty → 0.0, overlap measure keeps the raw count)
+    def score(ov, ls, rs):
+        if measure == "overlap":
+            return ov
+        if measure == "overlap_coefficient":
+            s = ov / F.least(ls, rs)
+        elif measure == "tversky_index":
+            alpha = float((measure_args or {}).get("alpha", 0.5))
+            beta = float((measure_args or {}).get("beta", 0.5))
+            s = ov / (ov + F.lit(alpha) * (ls - ov) + F.lit(beta) * (rs - ov))
+        else:
+            s = fm.set_sim_score_col(measure, ov, ls, rs)
+        return (
             F.when((ls == 0) & (rs == 0), F.lit(1.0))
             .when((ls == 0) | (rs == 0), F.lit(0.0))
-            .otherwise(score)
+            .otherwise(s)
         )
-    return (
-        joined.withColumn("_sim_score", score)
-        .where(comp_col(comp_op, F.col("_sim_score"), float(threshold)))
-        .select(*cand_cols, "_sim_score")
+
+    return score_pairs(
+        candset, candset_l_key_attr, candset_r_key_attr, l_tok, r_tok, score,
+        threshold, comp_op,
     )
 
 

@@ -16,13 +16,14 @@ reference ignores it for OVERLAP (filter/position_filter.py:394-396).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.output import assemble_output
 from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     COMP_OP_FN,
+    comp_col,
     validate_attr,
     validate_attr_type,
     validate_comp_op,
@@ -37,19 +38,6 @@ from ..plans.skew import (
     salted_token_join,
     sampled_hot_tokens,
 )
-
-_COMP_COL = {
-    ">=": lambda c, t: c >= t,
-    ">": lambda c, t: c > t,
-    "<=": lambda c, t: c <= t,
-    "<": lambda c, t: c < t,
-    "=": lambda c, t: c == t,
-    "!=": lambda c, t: c != t,
-}
-
-
-def comp_col(comp_op: str, col: Column, threshold) -> Column:
-    return _COMP_COL[comp_op](col, F.lit(threshold))
 
 
 def _expand_value_pairs(vpairs, ltable, rtable, l_key_attr, r_key_attr,

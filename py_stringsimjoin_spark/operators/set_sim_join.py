@@ -37,6 +37,7 @@ from ..plans.output import assemble_output
 from ..plans.stats import sample_plan_stats, value_hash_col
 from ..plans.validation import (
     COMP_OP_FN,
+    comp_col,
     validate_attr,
     validate_attr_type,
     validate_comp_op,
@@ -55,12 +56,6 @@ from ..plans.skew import (
 )
 
 _EMPTY_OK = ("jaccard", "cosine", "dice", "overlap_coefficient")
-
-_COMP_COL_FN = {
-    ">=": lambda c, t: c >= t,
-    ">": lambda c, t: c > t,
-    "=": lambda c, t: c == t,
-}
 
 
 def _append_empty_and_missing(
@@ -155,19 +150,11 @@ def _filter_and_verify(
         # codegen end to end. (The previous mapInPandas verify spent ~95% of
         # its wall time serializing the candidate arrays to Python: 6.1M
         # pairs ≈ 130 s vs ~10 s JVM-side, measured at sf0.1.)
-        ov = F.size(F.array_intersect("_l_ranked", "_r_ranked")).cast("double")
-        ls = F.size("_l_ranked").cast("double")
-        rs = F.size("_r_ranked").cast("double")
-        if measure == "jaccard":
-            score = ov / (ls + rs - ov)
-        elif measure == "cosine":
-            score = ov / F.sqrt(ls * rs)
-        elif measure == "dice":
-            score = F.lit(2.0) * ov / (ls + rs)
-        else:
-            raise ValueError(f"unsupported set-sim measure: {measure}")
+        score = fm.set_sim_score_col(
+            measure, *fm.overlap_and_sizes("_l_ranked", "_r_ranked")
+        )
         joined = joined.withColumn("_sim_score", score).where(
-            _COMP_COL_FN[comp_op](F.col("_sim_score"), F.lit(threshold))
+            comp_col(comp_op, F.col("_sim_score"), threshold)
         )
     return joined
 

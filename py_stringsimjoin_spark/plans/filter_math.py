@@ -162,6 +162,28 @@ def overlap_threshold_col(l_num: Column, r_num: Column, measure: str, threshold:
     raise ValueError(measure)
 
 
+def overlap_and_sizes(l_set: str, r_set: str) -> tuple[Column, Column, Column]:
+    """``(|l ∩ r|, |l|, |r|)`` as doubles for two duplicate-free array
+    columns: ``array_intersect``'s size IS the set overlap."""
+    ov = F.size(F.array_intersect(l_set, r_set)).cast("double")
+    return ov, F.size(l_set).cast("double"), F.size(r_set).cast("double")
+
+
+def set_sim_score_col(measure: str, ov: Column, ls: Column, rs: Column) -> Column:
+    """The jaccard / cosine / dice score from the overlap ``ov`` and the set
+    sizes ``ls``, ``rs`` (double columns): the oracle's IEEE-754 double
+    ops, so scores are bit-identical to it. The one score expression of
+    every set-sim verifier — the prefix kernels, the delta kernel,
+    ``verify_pairs`` and the pipeline's scoring stage."""
+    if measure == "jaccard":
+        return ov / (ls + rs - ov)
+    if measure == "cosine":
+        return ov / F.sqrt(ls * rs)
+    if measure == "dice":
+        return F.lit(2.0) * ov / (ls + rs)
+    raise ValueError(f"unsupported set-sim measure: {measure}")
+
+
 def first_shared_prefix_token() -> Column:
     """True on exactly one token-joined row per candidate pair: the row of
     the pair's first shared token.

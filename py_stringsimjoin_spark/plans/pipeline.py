@@ -14,7 +14,9 @@ Stages
                arrays are kept as the side tables 02_blocking__ordering and
                02_blocking__ranked, one parquet dir per epoch (0 here, one
                more per increment)
-  03_scoring   vectorized verify (jaccard by default) → (l_url, r_url, score)
+  03_scoring   the candidates joined to 02_blocking__ranked and scored by
+               the prefix kernels' own expression (jaccard by default; no
+               text read, no tokenizer) → (l_url, r_url, _sim_score)
   04_clusters  connected components over match edges → (url, cluster_id)
 
 ``increment`` folds a crawl delta into this state through the side tables:
@@ -37,6 +39,7 @@ import math
 import os
 import shutil
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,8 +47,10 @@ from pyspark.sql.types import StructType
 
 from ..functions.tokenizers import WhitespaceTokenizer
 from ..operators.connected_components import connected_components, update_components
+from ..operators.matcher import score_pairs
 from ..operators.prepared import PreparedSetSimCorpus
 from .cache import engine_cache_scope
+from .filter_math import set_sim_score_col
 from ..sources.pages import extract_text_col, extract_title_col
 
 
@@ -211,6 +216,16 @@ class Stage:
         with open(self.manifest_path) as f:
             return json.load(f)
 
+    def read_side(self, spark: SparkSession, name: str) -> DataFrame:
+        """The side table ``name`` over all its epoch dirs, with the schema
+        the manifest's ``side_schemas`` recorded (no inference job)."""
+        schema = StructType.fromJson(self.manifest()["side_schemas"][name])
+        return (
+            spark.read.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(f"{self.dir}__{name}")
+        )
+
 
 class LinkagePipeline:
     def __init__(
@@ -313,33 +328,26 @@ class LinkagePipeline:
 
     def scoring(self) -> dict:
         st_block = Stage(self.workdir, "02_blocking")
-        st_ext = Stage(self.workdir, "01_extract")
         st = Stage(self.workdir, "03_scoring")
         m_block = st_block.manifest()
         fp = _fingerprint({**self.params, "stage": "scoring", "up": m_block["fingerprint"]})
         if st.done(fp):
             return st.manifest()
-        docs = st_ext.read(self.spark)
         cand = st_block.read(self.spark)
         # the blocking manifest already counted the candidates it wrote
         n_cand = m_block["n_rows"]
         t0 = time.time()
-        from ..operators.matcher import verify_pairs
-
-        scored = verify_pairs(
+        # each candidate's sets are blocking's stored ranked arrays, scored
+        # by the prefix kernels' own expression: no text read, no tokenizer
+        sets = st_block.read_side(self.spark, "ranked").select("_l_key", "_l_ranked")
+        scored = score_pairs(
             cand.select(F.col("_l_key").alias("l_url"), F.col("_r_key").alias("r_url")),
             "l_url",
             "r_url",
-            docs,
-            docs,
-            "url",
-            "url",
-            self.join_attr,
-            self.join_attr,
-            self.tokenizer,
-            self.measure,
+            sets,
+            sets,
+            partial(set_sim_score_col, self.measure),
             self.threshold,
-            comp_op=">=",
         )
         m = st.write(scored, fp)
         dt = max(time.time() - t0, 1e-9)
@@ -439,16 +447,10 @@ class LinkagePipeline:
         store = {
             name: f"{st_block.dir}__{name}" for name in ("ordering", "ranked")
         }
-        schemas = st_block.manifest()["side_schemas"]
         epoch = max(int(e) for e in os.listdir(store["ranked"]))
         corpus = PreparedSetSimCorpus._of(
             old_docs, "url", self.join_attr, self.tokenizer,
-            *(
-                self.spark.read.schema(StructType.fromJson(schemas[name]))
-                .option("recursiveFileLookup", "true")
-                .parquet(d)
-                for name, d in store.items()
-            ),
+            *(st_block.read_side(self.spark, name) for name in store),
             epoch=epoch,
         )
 

@@ -27,6 +27,13 @@ COMP_OP_FN = {
     "!=": operator.ne,
 }
 
+
+def comp_col(comp_op: str, col, threshold):
+    """``col <comp_op> threshold`` as a Spark Column (``COMP_OP_FN``'s
+    operators apply to Columns as they do to scalars)."""
+    return COMP_OP_FN[comp_op](col, F.lit(threshold))
+
+
 COMP_OP_NUMPY = {
     ">=": np.greater_equal,
     ">": np.greater,

@@ -1,10 +1,8 @@
 """Stateful streaming exact dedup: first-seen wins, across micro-batches.
 
-``streaming/stream_dedup.py`` answers the NEAR-duplicate question against a
-static corpus with a stateless stream-static join; this module answers the
-EXACT-duplicate question against everything the stream itself has already
-seen — "has any earlier micro-batch carried this same content?" — which
-needs keyed state that outlives a micro-batch. That is precisely what
+This module answers the EXACT-duplicate question against everything the
+stream itself has already seen — "has any earlier micro-batch carried this
+same content?" — which needs keyed state that outlives a micro-batch. That is precisely what
 Structured Streaming's ``applyInPandasWithState`` provides: the stream is
 hash-partitioned by content fingerprint, each key's state (the canonical
 first-seen record id and a seen-count) lives in the state store, and the

@@ -139,6 +139,40 @@ def test_stage_write_runs_no_job_beyond_the_write(spark, pages, tmp_path):
     assert bare >= 1 and staged == bare
 
 
+def test_scoring_reads_the_ranked_store_not_the_text(spark, pages, tmp_path):
+    """Scoring verifies blocking's candidates against blocking's stored
+    ranked arrays: with 01_extract moved away and a tokenizer that cannot
+    run, it gives exactly ``verify_pairs``' rows and scores over the text."""
+    from py_stringsimjoin_spark.functions.tokenizers import WhitespaceTokenizer
+    from py_stringsimjoin_spark.operators.matcher import verify_pairs
+
+    wd = str(tmp_path)
+    pipe = LinkagePipeline(spark, wd, threshold=0.6)
+    pipe.extract(pages.drop("cluster_id"))
+    pipe.blocking()
+    st_ext = Stage(wd, "01_extract")
+    docs = st_ext.read(spark)
+    cand = Stage(wd, "02_blocking").read(spark).select(
+        F.col("_l_key").alias("l_url"), F.col("_r_key").alias("r_url")
+    )
+    expected = verify_pairs(
+        cand, "l_url", "r_url", docs, docs, "url", "url", "text", "text",
+        pipe.tokenizer, "jaccard", 0.6,
+    ).collect()
+    os.rename(st_ext.dir, st_ext.dir + "__aside")
+
+    class UnusableTokenizer(WhitespaceTokenizer):
+        def spark_col(self, col):
+            raise AssertionError("scoring tokenized text")
+
+    pipe.tokenizer = UnusableTokenizer()
+    m = pipe.scoring()
+    got = Stage(wd, "03_scoring").read(spark).collect()
+    assert expected and sorted(map(tuple, got)) == sorted(map(tuple, expected))
+    assert m["n_rows"] == len(expected)
+    assert m["candidates_scored"] == pipe.metrics()["02_blocking"]["n_rows"]
+
+
 def test_pages_table_io_roundtrip(spark, tmp_path):
     from py_stringsimjoin_spark.sources.io import read_pages_table, write_pages_table
     from py_stringsimjoin_spark.sources.pages import generate_pages

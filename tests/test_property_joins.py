@@ -8,12 +8,16 @@ distinct behind them.
 ``_join_rows_hint`` forces the set-sim and edit-distance kernels' tiny-join
 gate on the row-level join: 1 takes the gated plan (no hot-token probe, no
 exchange pinning), 10**9 the probed, salted and pinned plan. (A value-dedup
-join passes its own distinct-value count to the inner join instead.)"""
+join passes its own distinct-value count to the inner join instead.)
+
+``value_dedup`` is drawn from {False, True, "auto"}, and explicit examples
+force ``True`` on every run: the random corpora are rarely dup-heavy enough
+for "auto" to take the value-dedup plan."""
 
 import random
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from py_stringsimjoin_spark import WhitespaceTokenizer
@@ -42,8 +46,11 @@ def _mk_rows(seed: int, n: int):
     threshold=st.sampled_from([0.25, 0.4, 0.6, 0.85, 1.0]),
     measure=st.sampled_from(["jaccard", "cosine", "dice"]),
     rows_hint=st.sampled_from([1, 10**9]),
-    value_dedup=st.sampled_from([False, "auto"]),
+    value_dedup=st.sampled_from([False, True, "auto"]),
 )
+@example(seed=3, threshold=0.4, measure="jaccard", rows_hint=1, value_dedup=True)
+@example(seed=5, threshold=0.6, measure="cosine", rows_hint=10**9, value_dedup=True)
+@example(seed=11, threshold=0.25, measure="dice", rows_hint=1, value_dedup=True)
 def test_random_corpus_matches_oracle(spark, seed, threshold, measure, rows_hint, value_dedup):
     rows_a = _mk_rows(seed, 12)
     rows_b = _mk_rows(seed + 1, 12)
@@ -87,8 +94,11 @@ def _mk_str_rows(seed: int, n: int):
     threshold=st.sampled_from([0, 1, 2, 3]),
     comp_op=st.sampled_from(["<=", "<", "="]),
     rows_hint=st.sampled_from([1, 10**9]),
-    value_dedup=st.sampled_from([False, "auto"]),
+    value_dedup=st.sampled_from([False, True, "auto"]),
 )
+@example(seed=3, threshold=1, comp_op="<=", rows_hint=1, value_dedup=True)
+@example(seed=5, threshold=2, comp_op="<", rows_hint=10**9, value_dedup=True)
+@example(seed=11, threshold=0, comp_op="=", rows_hint=1, value_dedup=True)
 def test_random_edit_distance_matches_oracle(
     spark, seed, threshold, comp_op, rows_hint, value_dedup
 ):
